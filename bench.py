@@ -3,7 +3,7 @@
 
 Usage: python bench.py
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-       SPARK_GRAFT_CPUS   (default 32)
+       SPARK_GRAFT_CPUS   (default: the CPUs this process may run on)
 
 Each query is fully materialized via a count-style action
 (``df.write.format("noop")``) so timing covers the whole plan without
@@ -141,7 +141,7 @@ def main() -> None:
     # their caller accepts scale-derived configs (ADVICE r7 #2).
     os.environ.setdefault("CQDG_SCALE_DERIVE", "1")
     from cqdg_etl_spark.queries import REGISTRY
-    from cqdg_etl_spark.session import get_spark
+    from cqdg_etl_spark.session import default_cpus, get_spark
 
     spark = get_spark(app_name="cqdg-etl-spark-bench")
 
@@ -291,7 +291,7 @@ def main() -> None:
                 "sys_start": sys_start,
                 "sys_end": sys_end,
                 "steal_pct": _steal_pct(sys_start, sys_end),
-                "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+                "cpus": str(default_cpus()),
                 "notes": [],
             }
         )

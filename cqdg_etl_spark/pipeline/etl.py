@@ -8,6 +8,12 @@ Improvements over the reference, by design:
 - the 10 shared frames are ``.cache()``d — the reference recomputes
   every one of them for each of the 3 index builders
   (ProcessETL.scala:82,98-120), tripling the heaviest joins;
+- the study and donor summaries are plain aggregations over the donor ⋈
+  file join and one union of the clinical frames, with the same
+  documents as the reference's full outer joins against a study × donor
+  × value cross product (see ``indexes/summary.py``);
+- the ontology term tables are read with an explicit schema
+  (``ontology.TERM_SCHEMA``), so no JSON schema-inference pass runs;
 - Keycloak registration receives the same distinct internal_file_id set
   but through a pluggable no-op port (HTTP out of engine scope).
 """
@@ -27,6 +33,7 @@ from cqdg_etl_spark.pipeline.indexes.donor import build_donor_index
 from cqdg_etl_spark.pipeline.indexes.file import build_file_index
 from cqdg_etl_spark.pipeline.indexes.study import build_study_index
 from cqdg_etl_spark.pipeline.models import Metadata
+from cqdg_etl_spark.pipeline.ontology import TERM_SCHEMA
 from cqdg_etl_spark.sources import read_ndjson, read_parquet, write_partitioned_json
 
 ENTITY_PARQUETS = [
@@ -67,7 +74,9 @@ class ProcessETL:
             for name in ENTITY_PARQUETS
         }
         ontologies = {
-            name: read_ndjson(self.spark, f"{self.ontology_dir}/{name}_terms.json")
+            name: read_ndjson(
+                self.spark, f"{self.ontology_dir}/{name}_terms.json", TERM_SCHEMA
+            )
             for name in ONTOLOGIES
         }
         return entities, ontologies

@@ -6,8 +6,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.pipeline.indexes import summary as S
 from cqdg_etl_spark.pipeline.indexes.common import file_size
+from cqdg_etl_spark.pipeline.indexes.summary import donor_summary
 from cqdg_etl_spark.pipeline.models import Metadata
 
 
@@ -20,30 +20,7 @@ def build_donor_index(
     bio = data["biospecimenWithSamples"]
     file = data["file"]
 
-    donor_per_file, _, combos = S.prepare_summary_frames(donor, file)
-    by_category = S.files_by_field(donor_per_file, combos, "data_category")
-    by_strategy = S.files_by_field(donor_per_file, combos, "experimental_strategy")
-    available, available_only = S.clinical_data_available_per_donor(combos, data)
-
     keys = ["study_id", "submitter_donor_id"]
-    summary_group = (
-        by_category.join(by_strategy, keys)
-        .join(available, keys)
-        .join(available_only, keys)
-        .filter(F.col("study_id").isNotNull())
-        .filter(F.col("submitter_donor_id").isNotNull())
-        .groupBy(*keys)
-        .agg(
-            F.first(
-                F.struct(
-                    "data_category",
-                    "experimental_strategy",
-                    "clinical_data_available",
-                    "clinical_data_available_only",
-                )
-            ).alias("summary")
-        )
-    )
 
     file_renamed = (
         file.select(
@@ -88,7 +65,7 @@ def build_donor_index(
         donor_with_study.join(dx, keys, "left")
         .join(phen, keys, "left")
         .join(files_per_donor, keys, "left")
-        .join(summary_group, keys, "left")
+        .join(donor_summary(data), keys, "left")
         .select(
             *[
                 F.col(c)

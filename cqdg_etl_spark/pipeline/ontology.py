@@ -22,10 +22,35 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cqdg_etl_spark.functions.columns import display_name
 
 ICD_BLOCK_RE = "^[A-Z][0-9]{2}-[A-Z][0-9]{2}"
+
+_PARENTS = T.StructField("parents", T.ArrayType(T.StringType()))
+# The term table as JSON inference reads it (fields in alphabetical
+# order); passing it to the reader skips the inference pass.
+TERM_SCHEMA = T.StructType(
+    [
+        T.StructField(
+            "ancestors",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("id", T.StringType()),
+                        T.StructField("name", T.StringType()),
+                        _PARENTS,
+                    ]
+                )
+            ),
+        ),
+        T.StructField("id", T.StringType()),
+        T.StructField("is_leaf", T.BooleanType()),
+        T.StructField("name", T.StringType()),
+        _PARENTS,
+    ]
+)
 
 
 def main_category_predicate(code_col: str) -> tuple[Column, str]:

@@ -1,10 +1,12 @@
 """SparkSession factory.
 
-Tuned for the harness shape (local[N], single JVM, 128 GiB) while keeping
-every setting valid for a real multi-executor cluster: AQE handles runtime
-re-planning (partition coalescing, skew joins), Arrow accelerates any
-pandas-UDF exchange, and the session timezone is pinned to UTC so results
-are comparable with UTC-naive engines (DuckDB oracle).
+Sized from the host it runs on (local[N] over the usable CPUs, a driver
+heap of half the physical or cgroup memory; ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEMORY`` override) while keeping every setting valid for a
+real multi-executor cluster: AQE handles runtime re-planning (partition
+coalescing, skew joins), Arrow accelerates any pandas-UDF exchange, and
+the session timezone is pinned to UTC so results are comparable with
+UTC-naive engines (DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -13,7 +15,40 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def physical_memory_bytes() -> int:
+    """The smaller of the host's memory and this process's cgroup limit."""
+    limits = [os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")]
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                text = fh.read().strip()
+        except OSError:
+            continue
+        if text.isdigit():  # "max" (v2) means no limit
+            limits.append(int(text))
+    return min(limits)
+
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half of physical memory: the rest is
+    left to the JVM's off-heap use and the Python workers."""
+    return os.environ.get("SPARK_DRIVER_MEMORY") or (
+        f"{physical_memory_bytes() // 2 // 2**20}m"
+    )
+
+
+DEFAULT_SHUFFLE_PARTITIONS = default_cpus()
 
 
 def s3a_dev_conf(
@@ -64,8 +99,7 @@ def get_spark(
     - Parquet filter/column pushdown left on (defaults); partition sizing
       via maxPartitionBytes kept at 128 MB to match HDFS/S3 block reads.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    master = master or os.environ.get("SPARK_MASTER", f"local[{default_cpus()}]")
     shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
@@ -79,7 +113,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Testdata events.parquet carries TIMESTAMP(NANOS) which the

@@ -28,6 +28,19 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(_pytest.mark.nightly)
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Keep the deferred lane visible in every default-lane run."""
+    nightly = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("nightly")
+    ]
+    if nightly:
+        terminalreporter.write_line(
+            f"{len(nightly)} nightly tests deselected — run `pytest -m nightly`"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from cqdg_etl_spark.session import get_spark

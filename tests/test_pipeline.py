@@ -130,6 +130,14 @@ def test_preprocess_unknown_dictionary_version_raises(spark, pipeline_dirs, tmp_
 # ---------------------------------------------------------------- process
 
 
+@pytest.mark.parametrize("ontology", ["hpo", "mondo", "icd"])
+def test_term_schema_matches_inferred(spark, pipeline_dirs, ontology):
+    from cqdg_etl_spark.pipeline.ontology import TERM_SCHEMA
+
+    path = f"{pipeline_dirs['ontology']}/{ontology}_terms.json"
+    assert spark.read.json(path).schema == TERM_SCHEMA
+
+
 def _study(processed, study_id):
     return next(r for r in processed["studies"] if r.study_id == study_id)
 

@@ -2,7 +2,40 @@
 
 from __future__ import annotations
 
-from cqdg_etl_spark.session import s3a_dev_conf
+import os
+
+from cqdg_etl_spark.session import (
+    default_cpus,
+    driver_memory,
+    physical_memory_bytes,
+    s3a_dev_conf,
+)
+
+
+def _mem_total_bytes() -> int:
+    with open("/proc/meminfo") as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return kb * 1024
+
+
+def test_default_driver_heap_within_physical_memory(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    heap = driver_memory()
+    assert heap.endswith("m")
+    heap_bytes = int(heap[:-1]) * 2**20
+    assert 0 < heap_bytes <= physical_memory_bytes() <= _mem_total_bytes()
+
+
+def test_driver_memory_env_override(monkeypatch):
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert driver_memory() == "3g"
+
+
+def test_default_cpus_from_host_and_env(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
 
 
 def test_s3a_dev_conf_shape(monkeypatch):

@@ -1,4 +1,4 @@
-"""Golden rows for the study and donor ``summary`` columns.
+"""Golden rows and plan shape for the study and donor ``summary`` columns.
 
 The expected values were captured from the reference-shaped summary code
 (full-outer-join chains over study × donor × value cross products) and
@@ -21,6 +21,10 @@ The fixture extends the 3-donor clinical template with the edge cases:
 - ``proteomics`` occurs only in ST01, so ST02 lists it with
   ``donors: 0, files: 0``;
 - ``f1.gvcf`` belongs to both PT01 and PT05: the study counts it once.
+
+The plan-shape guard keeps the study × donor × value cross product from
+coming back: the index plans hold no full outer join and no nested-loop
+or cartesian join whose build side can have more than one row.
 """
 
 from __future__ import annotations
@@ -231,3 +235,43 @@ def test_donor_summary_golden(summary_indexes):
     assert _summaries(donors, "submitter_donor_id") == canonical(
         EXPECTED_DONOR_SUMMARIES
     )
+
+
+def _max_rows(node) -> int | None:
+    """Catalyst's static row bound of a physical node, None if unbounded."""
+    link = node.logicalLink()
+    if link.isEmpty() or link.get().maxRows().isEmpty():
+        return None
+    return link.get().maxRows().get()
+
+
+def plan_shape_violations(df) -> list[str]:
+    """Full outer joins, and nested-loop or cartesian joins whose build
+    side (either side, for a cartesian product) may exceed one row."""
+    found = []
+
+    def walk(node):
+        name = node.nodeName()
+        if "Join" in name and node.joinType().toString() == "FullOuter":
+            found.append(f"{name} FullOuter")
+        if name == "BroadcastNestedLoopJoin":
+            build = node.right() if node.buildSide().toString() == "BuildRight" else node.left()
+            rows = _max_rows(build)
+            if rows is None or rows > 1:
+                found.append(f"{name} build side max rows {rows}")
+        if name == "CartesianProduct":
+            bounds = [_max_rows(node.left()), _max_rows(node.right())]
+            if not any(b is not None and b <= 1 for b in bounds):
+                found.append(f"{name} side max rows {bounds}")
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().sparkPlan())
+    return found
+
+
+def test_summary_plans_have_no_cross_product(summary_indexes):
+    studies, donors = summary_indexes
+    assert plan_shape_violations(studies) == []
+    assert plan_shape_violations(donors) == []
