@@ -5,7 +5,6 @@ from cqdg_etl_spark.functions.columns import (
     is_not_blank,
     not_null_col,
     parse_date_multi,
-    to_boolean,
     truthy_bool,
 )
 from cqdg_etl_spark.functions.hashing import business_key_hash, deterministic_internal_id
@@ -22,7 +21,6 @@ __all__ = [
     "not_null_col",
     "is_not_blank",
     "truthy_bool",
-    "to_boolean",
     "display_name",
     "parse_date_multi",
     "calculate_age",

@@ -39,11 +39,6 @@ def truthy_bool(col: Column) -> Column:
     return F.lower(F.trim(col)).isin(TRUTHY_VALUES)
 
 
-def to_boolean(col: Column) -> Column:
-    """Numeric-string ≥ 1 → true (reference: ProcessETLUtils.scala:499-501)."""
-    return F.when(col.cast("int") >= 1, F.lit(True)).otherwise(F.lit(False))
-
-
 def display_name(name: Column, code: Column) -> Column:
     """``"Name (CODE)"`` display formatting
     (reference: ProcessETLUtils.scala:284-288)."""

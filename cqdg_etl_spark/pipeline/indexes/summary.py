@@ -56,12 +56,12 @@ CLINICAL_FRAMES = [
 DONOR_KEYS = ["study_id", "submitter_donor_id"]
 
 
-def donor_per_file(data: dict[str, DataFrame]) -> DataFrame:
+def _donor_per_file(data: dict[str, DataFrame]) -> DataFrame:
     """donor ⋈ file (reference: Summary.scala:11-28)."""
     return data["donor"].join(data["file"], DONOR_KEYS)
 
 
-def file_domains(donor_per_file: DataFrame) -> DataFrame:
+def _file_domains(donor_per_file: DataFrame) -> DataFrame:
     """One row: per field, its distinct non-null values as an array.
 
     No row when a domain is empty: the reference's summaries are then
@@ -72,7 +72,7 @@ def file_domains(donor_per_file: DataFrame) -> DataFrame:
     ).filter(reduce(lambda a, b: a & b, [F.size(f"{f}_domain") > 0 for f in FIELDS]))
 
 
-def value_counts(
+def _value_counts(
     donor_per_file: DataFrame, keys: list[str], field: str, counts: dict[str, Column]
 ) -> DataFrame:
     """Per ``keys``: a ``field`` value → struct(counts) map
@@ -94,7 +94,7 @@ def value_counts(
     )
 
 
-def padded(field: str, names: list[str]) -> Column:
+def _padded(field: str, names: list[str]) -> Column:
     """[{key, <names>...}] over the field's domain, 0 where a value has no
     count (reference: the cross product's unmatched rows)."""
     return F.transform(
@@ -106,7 +106,7 @@ def padded(field: str, names: list[str]) -> Column:
     ).alias(field)
 
 
-def clinical_rows(data: dict[str, DataFrame]) -> DataFrame:
+def _clinical_rows(data: dict[str, DataFrame]) -> DataFrame:
     """(study_id, submitter_donor_id, key, row_complete) over the 7
     clinical frames; ``row_complete`` is the reference's
     ``count(DISTINCT *)`` test: no top-level column is null."""
@@ -117,7 +117,8 @@ def clinical_rows(data: dict[str, DataFrame]) -> DataFrame:
                 *DONOR_KEYS,
                 F.lit(name).alias("key"),
                 reduce(
-                    lambda a, b: a & b, [data[k][c].isNotNull() for c in data[k].columns]
+                    lambda a, b: a & b,
+                    [data[k][c].isNotNull() for c in data[k].columns],
                 ).alias("row_complete"),
             )
             for k, name in CLINICAL_FRAMES
@@ -129,26 +130,28 @@ def study_summary(data: dict[str, DataFrame]) -> DataFrame:
     """(study_id, summary{data_category[{key, donors, files}],
     experimental_strategy[...], clinical_data_available[{key, donors}]})
     (reference: Summary.scala:30-59, 90-131)."""
-    dpf = donor_per_file(data)
+    dpf = _donor_per_file(data)
     counts = {
         "donors": F.countDistinct("submitter_donor_id"),
         "files": F.countDistinct("file_name"),
     }
-    by_field = [value_counts(dpf, ["study_id"], f, counts) for f in FIELDS]
+    by_field = [_value_counts(dpf, ["study_id"], f, counts) for f in FIELDS]
     clinical = (
-        clinical_rows(data)
+        _clinical_rows(data)
         .groupBy("study_id", "key")
         .agg(F.countDistinct("submitter_donor_id").alias("donors"))
         .groupBy("study_id")
         .agg(F.collect_list(F.struct("key", "donors")).alias("clinical_data_available"))
     )
+    # Inner joins, as the reference's: a study without a file or without
+    # a clinical row gets no summary.
     return (
         reduce(lambda a, b: a.join(b, "study_id"), [*by_field, clinical])
-        .crossJoin(F.broadcast(file_domains(dpf)))
+        .crossJoin(F.broadcast(_file_domains(dpf)))
         .select(
             "study_id",
             F.struct(
-                *[padded(f, list(counts)) for f in FIELDS], "clinical_data_available"
+                *[_padded(f, list(counts)) for f in FIELDS], "clinical_data_available"
             ).alias("summary"),
         )
     )
@@ -159,32 +162,41 @@ def donor_summary(data: dict[str, DataFrame]) -> DataFrame:
     experimental_strategy[...], clinical_data_available[{key, available}],
     clinical_data_available_only[{key}]})
     (reference: Summary.scala:61-88, 134-196)."""
-    dpf = donor_per_file(data)
+    dpf = _donor_per_file(data)
     clinical_keys = F.array(*[F.lit(name) for _, name in CLINICAL_FRAMES])
     counts = {"files": F.countDistinct("file_name")}
-    by_field = [value_counts(dpf, DONOR_KEYS, f, counts) for f in FIELDS]
+    by_field = [_value_counts(dpf, DONOR_KEYS, f, counts) for f in FIELDS]
+    # Only donors of a study with a file, and with an available key, get a
+    # summary (the reference's cross product and inner joins).
     available = (
-        clinical_rows(data)
+        _clinical_rows(data)
         .groupBy(*DONOR_KEYS)
-        .agg(F.collect_set(F.when(F.col("row_complete"), F.col("key"))).alias("_keys"))
-        .filter(F.size("_keys") > 0)
+        .agg(
+            F.collect_set(F.when(F.col("row_complete"), F.col("key"))).alias(
+                "available_keys"
+            )
+        )
+        .filter(F.size("available_keys") > 0)
         .join(dpf.select("study_id").distinct(), "study_id", "left_semi")
     )
     return (
         reduce(lambda a, b: a.join(b, DONOR_KEYS, "left"), [available, *by_field])
-        .crossJoin(F.broadcast(file_domains(dpf)))
+        .crossJoin(F.broadcast(_file_domains(dpf)))
         .select(
             *DONOR_KEYS,
             F.struct(
-                *[padded(f, list(counts)) for f in FIELDS],
+                *[_padded(f, list(counts)) for f in FIELDS],
                 F.transform(
                     clinical_keys,
                     lambda k: F.struct(
-                        k.alias("key"), F.array_contains("_keys", k).alias("available")
+                        k.alias("key"),
+                        F.array_contains("available_keys", k).alias("available"),
                     ),
                 ).alias("clinical_data_available"),
                 F.transform(
-                    F.filter(clinical_keys, lambda k: F.array_contains("_keys", k)),
+                    F.filter(
+                        clinical_keys, lambda k: F.array_contains("available_keys", k)
+                    ),
                     lambda k: F.struct(k.alias("key")),
                 ).alias("clinical_data_available_only"),
             ).alias("summary"),

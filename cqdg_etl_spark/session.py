@@ -48,9 +48,6 @@ def driver_memory() -> str:
     )
 
 
-DEFAULT_SHUFFLE_PARTITIONS = default_cpus()
-
-
 def s3a_dev_conf(
     endpoint: str = "http://localhost:9000",
     access_key: str | None = None,
@@ -99,8 +96,9 @@ def get_spark(
     - Parquet filter/column pushdown left on (defaults); partition sizing
       via maxPartitionBytes kept at 128 MB to match HDFS/S3 block reads.
     """
-    master = master or os.environ.get("SPARK_MASTER", f"local[{default_cpus()}]")
-    shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    cpus = default_cpus()
+    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    shuffle = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -255,7 +255,8 @@ def plan_shape_violations(df) -> list[str]:
         if "Join" in name and node.joinType().toString() == "FullOuter":
             found.append(f"{name} FullOuter")
         if name == "BroadcastNestedLoopJoin":
-            build = node.right() if node.buildSide().toString() == "BuildRight" else node.left()
+            build_right = node.buildSide().toString() == "BuildRight"
+            build = node.right() if build_right else node.left()
             rows = _max_rows(build)
             if rows is None or rows > 1:
                 found.append(f"{name} build side max rows {rows}")
