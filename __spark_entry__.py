@@ -28,9 +28,7 @@ _FRONT = [
     # position 9 sql_pipe_syntax_orders (the last r5-currency name);
     # positions 10-50 drain the r6 tail oldest-first (41 of 43 -- the
     # remaining 2 r6 names lead positions 51+ for roll-over headroom).
-    # This round's ADVICE edits touched only staged modules
-    # (datapipe24-27) -- the tool confirmed zero hash-stale published
-    # names. Positions 51+ continue the r6/r7 tail.
+    # Positions 51+ continue the r6/r7 tail.
     "emb_matryoshka_recall",
     "ev_markov_stationary",
     "ev_user_gini",

@@ -3,9 +3,9 @@ multi-source BFS hop distances.
 
 Lives in a NEW module (not ``operators/graph.py``) on the hash-
 stability discipline: editing a published UDF-bearing module stales
-every closure-sharing query's verification hash, so staged batches
-put new kernels beside, not inside, the published ones (the
-``lsh_audit.py`` / ``ann_rerank.py`` precedent).
+every closure-sharing query's verification hash, so new kernels go
+beside, not inside, the published ones (the ``lsh_audit.py`` /
+``ann_rerank.py`` precedent).
 
 Scale shapes (100-TB posture):
 - ``modularity`` is two equi-joins (edge ends → labels) + one
@@ -164,6 +164,16 @@ def neighbor_jaccard(
     (one map-side-combinable aggregate); existing edges anti-join
     out; the division is one IEEE op over exact integers, quantized
     at 6 dp.
+
+    Input contract, NOT checked: ``edges`` holds each undirected edge
+    exactly once, as (src < dst). A violation gives silently wrong
+    rows, not just wasted work. A duplicate pair, or a (b, a) next to
+    its (a, b), counts twice in both endpoints' degrees and doubles
+    every wedge through it, so ``deg_a``, ``deg_b``, ``common`` and
+    ``jaccard`` are all wrong. A lone reversed pair escapes the
+    existing-edge anti-join, so an adjacent pair that shares a
+    neighbor is scored as a predicted link. Canonicalize
+    (least/greatest) and deduplicate before calling.
 
     Returns (a, b, common, deg_a, deg_b, jaccard) for pairs with
     jaccard ≥ ``min_jaccard``.

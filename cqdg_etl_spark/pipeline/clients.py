@@ -79,20 +79,6 @@ class DeterministicIdResolver:
         )
 
 
-class MappingIdResolver:
-    """Resolve through an explicit hash→id map frame (what the HTTP ID
-    server effectively returns) — broadcast-joined back, mirroring
-    PreProcessUtils.scala:96-98 without the driver collect."""
-
-    def __init__(self, mapping: DataFrame):
-        self.mapping = mapping  # columns: hash, internal_id
-
-    def resolve(self, df: DataFrame, entity: str) -> DataFrame:
-        return df.join(
-            F.broadcast(self.mapping), df.cqdg_hash == self.mapping.hash
-        ).drop("hash")
-
-
 class RecordingKeycloak:
     """Test/no-op Keycloak: records the resource ids it was asked to
     create (the reference asserts exactly this set,

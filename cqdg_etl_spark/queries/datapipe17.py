@@ -1,15 +1,5 @@
-"""Round-9 staged queries — NOT yet in the driver registry.
-
-Same staging discipline as datapipe13→16: full Query objects with
-DuckDB value-hash oracles, locally verified by tests/test_datapipe17.py
-at sf0.001/sf0.01 + adversarial fixtures, kept out of
-``cqdg_etl_spark.queries.REGISTRY`` so the published surface never
-carries a name without a driver row. The round-8 window belongs to the
-datapipe16 publication + the backlog-clearing SLA; these wait their
-turn by design.
-
-To publish (round 9): call ``register()`` from queries/__init__.py and
-bump EXPECTED_REGISTRY_SIZE by ``len(STAGED)``.
+"""Datapipe batch 17: registered queries, each with a DuckDB
+value-hash oracle that tests/test_correctness.py checks.
 
 Batch theme: the curation signals a training-data pipeline reads
 BETWEEN the dedup and sampling passes — per-source character-entropy
@@ -33,25 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.queries.datapipe import SQL_NORM
-from cqdg_etl_spark.queries.registry import REGISTRY, Query, load
+from cqdg_etl_spark.queries.registry import load, query
 
 _SQL_NORM_DOC = SQL_NORM.format(c="text")
-
-STAGED: dict[str, Query] = {}
-
-
-def _staged(name: str, oracle: str | None = None, bench: bool = False,
-            tags: tuple[str, ...] = ()):
-    def deco(fn):
-        STAGED[name] = Query(name, fn, oracle, fn.__doc__ or "", bench, tags)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """Publish the staged queries into the driver registry (round 9)."""
-    REGISTRY.update(STAGED)
 
 
 def _q6(col):
@@ -73,7 +47,7 @@ _LN2 = repr(math.log(2.0))
 _ENT_LOW = 3.5  # bits; English prose runs ~4.0-4.2, repeated junk <3
 
 
-@_staged(
+@query(
     "tx_char_entropy_quality",
     bench=True,
     tags=("datapipe", "text", "quality"),
@@ -192,7 +166,7 @@ _KM_CENSOR_DAYS = 7  # observation window tail: users last seen within
 #                      this many days of corpus end are censored
 
 
-@_staged(
+@query(
     "ev_survival_km",
     tags=("datapipe", "events", "survival"),
     oracle=f"""
@@ -317,7 +291,7 @@ def ev_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ curriculum interleave ordering
 
 
-@_staged(
+@query(
     "ds_curriculum_interleave",
     tags=("datapipe", "sampling", "ordering"),
     oracle="""
@@ -453,7 +427,7 @@ def _sql_hits() -> str:
     """
 
 
-@_staged(
+@query(
     # NOT bench-flagged: bench.py times the final action only, and an
     # iterative query does its real work in per-round localCheckpoint
     # actions inside fn() — the timed write would read the 10-row
@@ -547,7 +521,7 @@ _CC_GAP_US = 30 * 60 * 1_000_000  # the events.py sessionization gap
 _CC_TOPK = 10
 
 
-@_staged(
+@query(
     "ev_peak_concurrency",
     bench=True,
     tags=("datapipe", "events", "session"),
@@ -679,7 +653,7 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------- bipartite type-affinity projection
 
 
-@_staged(
+@query(
     "graph_type_affinity",
     tags=("graph", "bipartite", "projection"),
     oracle=f"""
@@ -761,7 +735,7 @@ def graph_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VG_DECILES = 10
 
 
-@_staged(
+@query(
     "tx_vocab_growth_curve",
     tags=("datapipe", "text", "vocabulary"),
     oracle=f"""
@@ -913,7 +887,7 @@ def tx_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ DAU/WAU engagement stickiness
 
 
-@_staged(
+@query(
     "ev_dau_wau_stickiness",
     tags=("datapipe", "events", "engagement"),
     oracle=f"""
@@ -991,7 +965,7 @@ def ev_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RS_TARGET = 3.0  # expected copies for the longest document
 
 
-@_staged(
+@query(
     "ds_stochastic_round_resample",
     tags=("datapipe", "sampling", "resample"),
     oracle=f"""

@@ -10,6 +10,7 @@ row-count + schema + value-hash check.
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -28,13 +29,32 @@ TABLES = [
 ]
 
 
-def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
+def duckdb_conn(sf_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
+    """One DuckDB view per table: ``{t}.parquet`` is a file, or the
+    directory of part files Spark writes (``fixture_dir``)."""
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    for t in tables:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{path}'")
     return con
+
+
+def fixture_dir(tmp_path, **tables) -> str:
+    """Write hand-built Spark frames as parquet under one dir, so a query
+    and its DuckDB oracle read identical bytes."""
+    d = str(tmp_path / "fx")
+    for name, df in tables.items():
+        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{name}.parquet")
+    return d
+
+
+def module_queries(module: str) -> list[str]:
+    """Sorted registry names whose query function is defined in `module`."""
+    from cqdg_etl_spark.queries import REGISTRY
+
+    return sorted(n for n, q in REGISTRY.items() if q.fn.__module__ == module)
 
 
 def _canon_cell(v) -> str:
@@ -73,14 +93,16 @@ def canonical_rows(df: pd.DataFrame) -> list[tuple[str, ...]]:
     return sorted(out)
 
 
-def compare_query(spark, name: str, sf_dir: str) -> None:
-    """Assert the Spark result matches the DuckDB oracle for `name`."""
+def compare_query(spark, name: str, sf_dir: str, con=None) -> pd.DataFrame:
+    """Assert the Spark result matches the DuckDB oracle for `name` and
+    return the Spark rows. `con` defaults to views over every table of
+    `sf_dir`; a fixture dir holding only some tables passes its own."""
     from cqdg_etl_spark.queries import REGISTRY
 
     q = REGISTRY[name]
     assert q.oracle is not None, f"{name} has no oracle"
     actual = q.fn(spark, sf_dir).toPandas()
-    con = duckdb_conn(sf_dir)
+    con = con or duckdb_conn(sf_dir)
     expected = con.execute(q.oracle).df()
 
     assert sorted(actual.columns) == sorted(expected.columns), (
@@ -98,3 +120,4 @@ def compare_query(spark, name: str, sf_dir: str) -> None:
             f"{name}: value mismatch.\n only-spark (≤5): {diff_a}\n"
             f" only-oracle (≤5): {diff_e}\n cols(sorted)={sorted(actual.columns)}"
         )
+    return actual

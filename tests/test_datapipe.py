@@ -5,10 +5,13 @@ batch determinism.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cqdg_etl_spark.operators import dedup, multimodal, similarity
 from cqdg_etl_spark.queries.registry import load
+
+pytestmark = pytest.mark.nightly
 
 
 def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):

@@ -4,7 +4,10 @@ covered by tests/test_correctness.py.)"""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.nightly
 
 
 # ------------------------------------------------- label_propagation

@@ -1,47 +1,12 @@
-"""datapipe13 queries (staged through the round-4 registry freeze,
-published round 5): full local verification against the DuckDB
-oracles — the same comparison the driver gate runs — plus kernel-level
-behavioral tests. The fleet-wide plan lint (test_plan_lint.py) covers
-these names now that they are in REGISTRY."""
+"""datapipe13 kernel-level behavioral tests. The queries' oracle parity
+and plan shape are checked registry-wide by test_correctness.py and
+test_plan_lint.py."""
 
 from __future__ import annotations
 
 import pytest
 
-from cqdg_etl_spark.queries.datapipe13 import STAGED
-from tests.oracle_harness import canonical_rows, duckdb_conn
-
-
-def _compare_staged(spark, name: str, sf_dir: str) -> None:
-    q = STAGED[name]
-    actual = q.fn(spark, sf_dir).toPandas()
-    expected = duckdb_conn(sf_dir).execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns), name
-    assert len(actual) == len(expected), (
-        f"{name}: rows spark={len(actual)} oracle={len(expected)}"
-    )
-    a, e = canonical_rows(actual), canonical_rows(expected)
-    if a != e:
-        only_a = [r for r in a if r not in set(e)][:5]
-        only_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch.\n only-spark: {only_a}\n"
-            f" only-oracle: {only_e}"
-        )
-
-
-def test_staged_published():
-    """Round 5 lifted the round-4 freeze: every staged name is in the
-    registry, bound to the same Query object."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, name
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match(spark, sf_dir, name):
-    _compare_staged(spark, name, sf_dir)
+pytestmark = pytest.mark.nightly
 
 
 def test_gemm_equals_jvm_bruteforce(spark, sf_dir):

@@ -1,96 +1,22 @@
-"""datapipe14 queries (staged for round-6 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-(the fixture parquet dir doubles as an sf_dir, so the hand-built edge
-cases get the oracle treatment too) and hand-computed expectations.
-A staged-scope plan lint mirrors tests/test_plan_lint.py until
-publication moves these names under the fleet-wide lint."""
+"""datapipe14 adversarial fixtures, run through both engines where the
+query has an oracle (the fixture parquet dir doubles as an sf_dir),
+plus hand-computed expectations. Registry-wide oracle parity and plan
+shape are checked by test_correctness.py and test_plan_lint.py."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.datapipe14 import STAGED
-from tests.oracle_harness import canonical_rows, duckdb_conn
+from cqdg_etl_spark.queries import REGISTRY
+from tests.oracle_harness import (
+    canonical_rows,
+    compare_query,
+    duckdb_conn,
+    fixture_dir,
+)
 
-
-def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
-    actual = q.fn(spark, sf_dir).toPandas()
-    con = con or duckdb_conn(sf_dir)
-    expected = con.execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns), name
-    assert len(actual) == len(expected), (
-        f"{name}: rows spark={len(actual)} oracle={len(expected)}"
-    )
-    a, e = canonical_rows(actual), canonical_rows(expected)
-    if a != e:
-        only_a = [r for r in a if r not in set(e)][:5]
-        only_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch.\n only-spark: {only_a}\n"
-            f" only-oracle: {only_e}"
-        )
-
-
-def test_staged_published():
-    """Round-6 publication: every staged name is bound in REGISTRY to
-    the SAME Query object (not a shadowing copy)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, name
-
-
-def test_staged_batch_size():
-    assert len(STAGED) == 10
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match(spark, sf_dir, name):
-    _compare_staged(spark, name, sf_dir)
-
-
-# ---------------------------------------------------------- plan lint
-
-_FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
-              "BatchEvalPython ")
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    for node in _FORBIDDEN:
-        assert node not in plan, f"{name}: {node} in physical plan\n{plan}"
-
-
-# ----------------------------------------------------- fixture helpers
-
-
-def _fixture_dir(spark, tmp_path, **tables) -> str:
-    """Write hand-built tables as parquet under one dir so the STAGED
-    fn and its DuckDB oracle both read identical bytes."""
-    d = str(tmp_path / "fx")
-    for name, df in tables.items():
-        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{name}.parquet")
-    return d
-
-
-def _fixture_conn(sf_dir: str, tables) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet/*.parquet'"
-        )
-    return con
+pytestmark = pytest.mark.nightly
 
 
 # ------------------------------------------------- paragraph dedup
@@ -112,15 +38,16 @@ def test_paragraph_dedup_cross_and_within_doc(spark, tmp_path):
         ],
         "doc_id long, text string, lang string, source string, n_chars int",
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {
         r["doc_id"]: (r["n_paras"], r["n_kept"])
-        for r in STAGED["dd_paragraph_dedup"].fn(spark, d).collect()
+        for r in REGISTRY["dd_paragraph_dedup"].fn(spark, d).collect()
     }
     # doc 1 owns p1+p2; doc 2 keeps only p3 (p1 seen); doc 3 keeps none
     assert out == {1: (2, 2), 2: (2, 1), 3: (2, 0)}
-    _compare_staged(spark, "dd_paragraph_dedup", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "dd_paragraph_dedup", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ------------------------------------------------- LSH recall eval
@@ -136,15 +63,16 @@ def test_lsh_recall_identical_docs_decile10(spark, tmp_path):
            for i in range(3)],
         "doc_id long, text string, lang string, source string, n_chars int",
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     rows = {
         r["jaccard_decile"]: r
-        for r in STAGED["dd_lsh_recall_eval"].fn(spark, d).collect()
+        for r in REGISTRY["dd_lsh_recall_eval"].fn(spark, d).collect()
     }
     assert rows[10]["n_true_pairs"] == 6  # C(4,2) identical pairs
     assert rows[10]["recall"] == 1.0
-    _compare_staged(spark, "dd_lsh_recall_eval", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "dd_lsh_recall_eval", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ------------------------------------------------- length buckets
@@ -160,10 +88,10 @@ def test_length_buckets_boundaries(spark, tmp_path):
         ],
         "doc_id long, text string, lang string, source string, n_chars int",
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {
         r["bucket_lo"]: r
-        for r in STAGED["ds_length_buckets"].fn(spark, d).collect()
+        for r in REGISTRY["ds_length_buckets"].fn(spark, d).collect()
     }
     assert set(out) == {1, 4, 8}
     assert (out[1]["bucket_hi"], out[1]["docs_per_batch"]) == (1, 4096)
@@ -171,8 +99,9 @@ def test_length_buckets_boundaries(spark, tmp_path):
     b8 = out[8]
     # two 8-token docs pad to bucket_hi 15: 2*15 - 16 = 14 wasted
     assert (b8["n_docs"], b8["padded_tokens"], b8["n_batches"]) == (2, 14, 1)
-    _compare_staged(spark, "ds_length_buckets", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "ds_length_buckets", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ------------------------------------------------- water-filling
@@ -191,15 +120,16 @@ def test_waterfill_hand_computed(spark, tmp_path):
         rows,
         "doc_id long, text string, lang string, source string, n_chars int",
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {
         r["source"]: (r["alloc_tokens"], r["saturated"])
-        for r in STAGED["ds_waterfill_budget"].fn(spark, d).collect()
+        for r in REGISTRY["ds_waterfill_budget"].fn(spark, d).collect()
     }
     assert out == {"small": (10, True), "mid": (20, True), "big": (35, False)}
     assert sum(a for a, _ in out.values()) == 65  # == budget exactly
-    _compare_staged(spark, "ds_waterfill_budget", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "ds_waterfill_budget", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 def test_waterfill_remainder_distribution(spark, tmp_path):
@@ -210,14 +140,15 @@ def test_waterfill_remainder_distribution(spark, tmp_path):
         [(i, " ".join(["w"] * 9), "en", f"s{i}", 1) for i in range(3)],
         "doc_id long, text string, lang string, source string, n_chars int",
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {
         r["source"]: r["alloc_tokens"]
-        for r in STAGED["ds_waterfill_budget"].fn(spark, d).collect()
+        for r in REGISTRY["ds_waterfill_budget"].fn(spark, d).collect()
     }
     assert out == {"s0": 5, "s1": 4, "s2": 4}
-    _compare_staged(spark, "ds_waterfill_budget", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "ds_waterfill_budget", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ------------------------------------------------- k-core peeling
@@ -235,12 +166,13 @@ def test_kcore_k4_survives_pendant_chain_peels(spark, tmp_path):
         [(o, p) for o, p in k4 + chain],
         "l_orderkey long, l_partkey long",
     )
-    d = _fixture_dir(spark, tmp_path, lineitem=li)
+    d = fixture_dir(tmp_path, lineitem=li)
     out = {r["node"]: r["deg"]
-           for r in STAGED["graph_kcore_peel"].fn(spark, d).collect()}
+           for r in REGISTRY["graph_kcore_peel"].fn(spark, d).collect()}
     assert out == {1: 3, 2: 3, 3: 3, 4: 3}
-    _compare_staged(spark, "graph_kcore_peel", d,
-                    con=_fixture_conn(d, ["lineitem"]))
+    compare_query(
+        spark, "graph_kcore_peel", d, con=duckdb_conn(d, ["lineitem"])
+    )
 
 
 # ------------------------------------------------- EWMA
@@ -261,8 +193,8 @@ def test_ewma_hand_computed(spark, tmp_path):
         "user_id long, event_id long, ts timestamp, event_type string,"
         " value double",
     )
-    d = _fixture_dir(spark, tmp_path, events=ev)
-    out = STAGED["ev_ewma_smoothed"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, events=ev)
+    out = REGISTRY["ev_ewma_smoothed"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["n_events"], r["final_ewma"], r["max_ewma"]) == (3, 4.0, 6.0)
@@ -274,7 +206,7 @@ def test_ewma_arrival_order_invariance(spark, sf_dir, tmp_path):
     bit-identical state."""
     from cqdg_etl_spark.queries.registry import load
 
-    base = STAGED["ev_ewma_smoothed"].fn(spark, sf_dir).toPandas()
+    base = REGISTRY["ev_ewma_smoothed"].fn(spark, sf_dir).toPandas()
     shuffled = (
         load(spark, sf_dir, "events")
         .orderBy(F.md5(F.concat_ws(":", "user_id", "event_id")))
@@ -282,7 +214,7 @@ def test_ewma_arrival_order_invariance(spark, sf_dir, tmp_path):
     )
     d = str(tmp_path / "shuf")
     shuffled.write.mode("overwrite").parquet(f"{d}/events.parquet")
-    again = STAGED["ev_ewma_smoothed"].fn(spark, d).toPandas()
+    again = REGISTRY["ev_ewma_smoothed"].fn(spark, d).toPandas()
     assert canonical_rows(again) == canonical_rows(base)
 
 
@@ -303,7 +235,7 @@ def test_mp4_demux_matches_direct_python(spark, sf_dir):
     from cqdg_etl_spark.queries.datapipe14 import _MP4_DELTA, _mp4_samples_for
     from cqdg_etl_spark.queries.registry import load
 
-    out = STAGED["mm_mp4_demux_stats"].fn(spark, sf_dir).toPandas()
+    out = REGISTRY["mm_mp4_demux_stats"].fn(spark, sf_dir).toPandas()
     assert out["n_samples"].between(2, 8).all()
     docs = load(spark, sf_dir, "documents").select("doc_id", "text").limit(5)
     for row in docs.collect():
@@ -331,9 +263,10 @@ def test_dim_variance_isolates_varying_dim(spark, tmp_path):
         [(1, base, 0), (2, v2, 0)],
         "vec_id long, embedding array<float>, label int",
     )
-    d = _fixture_dir(spark, tmp_path, embeddings=emb)
-    out = STAGED["emb_dim_variance_topk"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, embeddings=emb)
+    out = REGISTRY["emb_dim_variance_topk"].fn(spark, d).collect()
     assert out[0]["dim"] == 5 and out[0]["variance"] == 1.0  # ((1-2)^2+(3-2)^2)/2
     assert all(r["variance"] == 0.0 for r in out[1:])
-    _compare_staged(spark, "emb_dim_variance_topk", d,
-                    con=_fixture_conn(d, ["embeddings"]))
+    compare_query(
+        spark, "emb_dim_variance_topk", d, con=duckdb_conn(d, ["embeddings"])
+    )

@@ -1,99 +1,18 @@
-"""datapipe15 queries (staged for round-7 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-(the fixture parquet dir doubles as an sf_dir, so the hand-built edge
-cases get the oracle treatment too) and hand-computed expectations.
-A staged-scope plan lint mirrors tests/test_plan_lint.py until
-publication moves these names under the fleet-wide lint."""
+"""datapipe15 adversarial fixtures, run through both engines where the
+query has an oracle (the fixture parquet dir doubles as an sf_dir),
+plus hand-computed expectations. Registry-wide oracle parity and plan
+shape are checked by test_correctness.py and test_plan_lint.py."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
-
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.datapipe15 import STAGED
-from tests.oracle_harness import canonical_rows, duckdb_conn
+from cqdg_etl_spark.queries import REGISTRY
+from tests.oracle_harness import compare_query, duckdb_conn, fixture_dir
 
-
-def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
-    actual = q.fn(spark, sf_dir).toPandas()
-    con = con or duckdb_conn(sf_dir)
-    expected = con.execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns), name
-    assert len(actual) == len(expected), (
-        f"{name}: rows spark={len(actual)} oracle={len(expected)}"
-    )
-    a, e = canonical_rows(actual), canonical_rows(expected)
-    if a != e:
-        only_a = [r for r in a if r not in set(e)][:5]
-        only_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch.\n only-spark: {only_a}\n"
-            f" only-oracle: {only_e}"
-        )
-
-
-def test_staged_not_published():
-    """Round-7 publication flipped: every datapipe15 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13/14 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe15 name {name!r} not published into REGISTRY"
-        )
-
-
-def test_staged_batch_size():
-    assert len(STAGED) == 12
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match(spark, sf_dir, name):
-    _compare_staged(spark, name, sf_dir)
-
-
-# ---------------------------------------------------------- plan lint
-
-_FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
-              "BatchEvalPython ")
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    for node in _FORBIDDEN:
-        assert node not in plan, f"{name}: {node} in physical plan\n{plan}"
-
-
-# ----------------------------------------------------- fixture helpers
-
-
-def _fixture_dir(spark, tmp_path, **tables) -> str:
-    """Write hand-built tables as parquet under one dir so the STAGED
-    fn and its DuckDB oracle both read identical bytes."""
-    d = str(tmp_path / "fx")
-    for name, df in tables.items():
-        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{name}.parquet")
-    return d
-
-
-def _fixture_conn(sf_dir: str, tables) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet/*.parquet'"
-        )
-    return con
+pytestmark = pytest.mark.nightly
 
 
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars int"
@@ -118,14 +37,15 @@ def test_truncation_catches_what_jaccard_misses(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     rows = {
         (r["doc_a"], r["doc_b"]): (r["len_a"], r["len_b"])
-        for r in STAGED["dd_truncation_prefix_pairs"].fn(spark, d).collect()
+        for r in REGISTRY["dd_truncation_prefix_pairs"].fn(spark, d).collect()
     }
     assert rows == {(1, 2): (20, 200)}
-    _compare_staged(spark, "dd_truncation_prefix_pairs", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "dd_truncation_prefix_pairs", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 def test_truncation_whitespace_normalized(spark, tmp_path):
@@ -139,8 +59,8 @@ def test_truncation_whitespace_normalized(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
-    out = STAGED["dd_truncation_prefix_pairs"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, documents=docs)
+    out = REGISTRY["dd_truncation_prefix_pairs"].fn(spark, d).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in out] == [(1, 2)]
 
 
@@ -156,13 +76,14 @@ def test_syllable_complexity_hand_computed(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, "banana analysis go", "en", "s0", 1)], _DOC_SCHEMA
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
-    r = STAGED["tx_syllable_complexity"].fn(spark, d).collect()[0]
+    d = fixture_dir(tmp_path, documents=docs)
+    r = REGISTRY["tx_syllable_complexity"].fn(spark, d).collect()[0]
     assert (r["n_docs"], r["words"], r["syllables"]) == (1, 3, 7)
     assert r["complex_word_rate"] == round(2 / 3, 6)
     assert r["long_word_rate"] == round(1 / 3, 6)
-    _compare_staged(spark, "tx_syllable_complexity", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "tx_syllable_complexity", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ----------------------------------------------- shingle novelty curve
@@ -181,10 +102,10 @@ def test_novelty_first_occurrence_ordering(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {
         r["doc_id"]: (r["n_shingles"], r["novel"])
-        for r in STAGED["tx_shingle_novelty"].fn(spark, d).collect()
+        for r in REGISTRY["tx_shingle_novelty"].fn(spark, d).collect()
     }
     # doc1: 10 shingles, all first; doc2: same 10, none first;
     # doc3: 22 distinct shingles (a-run 10 shared + 2 bridge + 10 b-run),
@@ -192,8 +113,9 @@ def test_novelty_first_occurrence_ordering(spark, tmp_path):
     assert out[1] == (10, 10)
     assert out[2] == (10, 0)
     assert out[3] == (22, 12)
-    _compare_staged(spark, "tx_shingle_novelty", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "tx_shingle_novelty", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # -------------------------------------------- seasonal-baseline outliers
@@ -223,12 +145,13 @@ def test_seasonal_outlier_planted_spike(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    d = _fixture_dir(spark, tmp_path, events=ev)
-    out = STAGED["ev_seasonal_outliers"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, events=ev)
+    out = REGISTRY["ev_seasonal_outliers"].fn(spark, d).collect()
     assert [r["event_id"] for r in out] == [99]
     assert out[0]["zscore"] > 2.5
-    _compare_staged(spark, "ev_seasonal_outliers", d,
-                    con=_fixture_conn(d, ["events"]))
+    compare_query(
+        spark, "ev_seasonal_outliers", d, con=duckdb_conn(d, ["events"])
+    )
 
 
 # ------------------------------------------- stratified k-fold balance
@@ -237,7 +160,7 @@ def test_seasonal_outlier_planted_spike(spark, tmp_path):
 def test_kfold_exact_balance_per_stratum(spark, sf_dir):
     """The whole point vs hash-mod-k: within every stratum the fold
     sizes differ by at most one."""
-    out = STAGED["ds_stratified_kfold"].fn(spark, sf_dir).collect()
+    out = REGISTRY["ds_stratified_kfold"].fn(spark, sf_dir).collect()
     by_lang: dict[str, list[int]] = {}
     for r in out:
         by_lang.setdefault(r["lang"], []).append(r["n"])
@@ -249,10 +172,10 @@ def test_kfold_exact_balance_per_stratum(spark, sf_dir):
 
 def test_kfold_deterministic(spark, sf_dir):
     a = sorted(
-        map(tuple, STAGED["ds_stratified_kfold"].fn(spark, sf_dir).collect())
+        map(tuple, REGISTRY["ds_stratified_kfold"].fn(spark, sf_dir).collect())
     )
     b = sorted(
-        map(tuple, STAGED["ds_stratified_kfold"].fn(spark, sf_dir).collect())
+        map(tuple, REGISTRY["ds_stratified_kfold"].fn(spark, sf_dir).collect())
     )
     assert a == b
 
@@ -266,7 +189,7 @@ def test_weighted_wor_no_repeats_and_weight_bias(spark, sf_dir):
     exceeds the corpus mean (long docs are favored by construction —
     the probabilistic statement is deterministic here because the md5
     draw is fixed)."""
-    out = STAGED["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()
+    out = REGISTRY["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()
     assert len(out) == 100
     ids = [r["doc_id"] for r in out]
     assert len(set(ids)) == 100
@@ -282,8 +205,12 @@ def test_weighted_wor_no_repeats_and_weight_bias(spark, sf_dir):
 
 
 def test_weighted_wor_determinism(spark, sf_dir):
-    a = sorted(map(tuple, STAGED["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()))
-    b = sorted(map(tuple, STAGED["ds_weighted_sample_wor"].fn(spark, sf_dir).collect()))
+    a = sorted(
+        map(tuple, REGISTRY["ds_weighted_sample_wor"].fn(spark, sf_dir).collect())
+    )
+    b = sorted(
+        map(tuple, REGISTRY["ds_weighted_sample_wor"].fn(spark, sf_dir).collect())
+    )
     assert a == b
 
 
@@ -294,7 +221,7 @@ def test_rendezvous_minimal_disruption(spark, sf_dir):
     """The defining property: growing the ring 16 -> 17 moves a doc
     ONLY to the new shard — every off-diagonal matrix row must have
     shard_after == 16 — and the moved fraction is near 1/17."""
-    out = STAGED["ds_rendezvous_rebalance"].fn(spark, sf_dir).collect()
+    out = REGISTRY["ds_rendezvous_rebalance"].fn(spark, sf_dir).collect()
     total = sum(r["n_docs"] for r in out)
     moved = 0
     for r in out:
@@ -325,17 +252,18 @@ def test_ppr_mass_decays_with_distance(spark, tmp_path):
         [(o, p) for o in range(1, 4) for p in (o - 1, o)],
         "l_orderkey long, l_partkey long",
     )
-    d = _fixture_dir(spark, tmp_path, lineitem=li)
+    d = fixture_dir(tmp_path, lineitem=li)
     out = {
         r["node"]: r["rank_rel"]
-        for r in STAGED["graph_personalized_pagerank"].fn(spark, d).collect()
+        for r in REGISTRY["graph_personalized_pagerank"].fn(spark, d).collect()
     }
     # seed set = {0} (0 % 97 == 0)
     assert out[0] == max(out.values())
     assert out[3] == min(out.values())
     assert all(v > 0.0 for v in out.values())
-    _compare_staged(spark, "graph_personalized_pagerank", d,
-                    con=_fixture_conn(d, ["lineitem"]))
+    compare_query(
+        spark, "graph_personalized_pagerank", d, con=duckdb_conn(d, ["lineitem"])
+    )
 
 
 def test_ppr_no_seed_mass_without_seeds_in_component(spark, tmp_path):
@@ -345,10 +273,10 @@ def test_ppr_no_seed_mass_without_seeds_in_component(spark, tmp_path):
         [(1, 0), (1, 1), (2, 501), (2, 502)],
         "l_orderkey long, l_partkey long",
     )
-    d = _fixture_dir(spark, tmp_path, lineitem=li)
+    d = fixture_dir(tmp_path, lineitem=li)
     out = {
         r["node"]: r["rank_rel"]
-        for r in STAGED["graph_personalized_pagerank"].fn(spark, d).collect()
+        for r in REGISTRY["graph_personalized_pagerank"].fn(spark, d).collect()
     }
     assert out[501] == 0.0 and out[502] == 0.0
     assert out[0] > 0.0 and out[1] > 0.0
@@ -365,7 +293,7 @@ def test_lsh_param_audit_monotone_and_model(spark, sf_dir):
 
     rows = {
         r["bands"]: r
-        for r in STAGED["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
+        for r in REGISTRY["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
     }
     assert set(rows) == {8, 16, 32}
     assert (
@@ -387,7 +315,7 @@ def test_lsh_param_audit_subsumes_registered_candidates(spark, sf_dir):
 
     n_16 = {
         r["bands"]: r["n_candidate_pairs"]
-        for r in STAGED["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
+        for r in REGISTRY["dd_lsh_param_audit"].fn(spark, sf_dir).collect()
     }[16]
     n_reg = REGISTRY["dd_minhash_lsh_candidates"].fn(spark, sf_dir).count()
     assert n_16 == n_reg
@@ -429,16 +357,17 @@ def test_bpe_pretoken_hand_computed(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, "Ab2 c!!", "en", "s0", 7)], _DOC_SCHEMA
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
-    out = STAGED["tx_bpe_pretoken_stats"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, documents=docs)
+    out = REGISTRY["tx_bpe_pretoken_stats"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_pretokens"] == 5
     assert r["n_distinct_pretokens"] == 4  # ab, 2, c, !
     assert r["chars_per_pretoken"] == 1.2
     assert r["pretokens_per_wstoken"] == 2.5
-    _compare_staged(spark, "tx_bpe_pretoken_stats", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "tx_bpe_pretoken_stats", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ------------------------------------------- strict 3-step funnel
@@ -468,14 +397,15 @@ def test_strict_funnel_order_and_windows(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    d = _fixture_dir(spark, tmp_path, events=ev)
+    d = fixture_dir(tmp_path, events=ev)
     out = {
         r["stage"]: r["n_users"]
-        for r in STAGED["ev_strict_funnel_3step"].fn(spark, d).collect()
+        for r in REGISTRY["ev_strict_funnel_3step"].fn(spark, d).collect()
     }
     assert out == {"signup": 4, "view": 2, "purchase": 1}
-    _compare_staged(spark, "ev_strict_funnel_3step", d,
-                    con=_fixture_conn(d, ["events"]))
+    compare_query(
+        spark, "ev_strict_funnel_3step", d, con=duckdb_conn(d, ["events"])
+    )
 
 
 # ------------------------------------------- intra-class dispersion
@@ -496,10 +426,10 @@ def test_dispersion_tight_vs_mixed_cluster(spark, tmp_path):
         ],
         "vec_id long, embedding array<float>, label int",
     )
-    d = _fixture_dir(spark, tmp_path, embeddings=emb)
+    d = fixture_dir(tmp_path, embeddings=emb)
     out = {
         r["label"]: r
-        for r in STAGED["emb_intra_class_dispersion"].fn(spark, d).collect()
+        for r in REGISTRY["emb_intra_class_dispersion"].fn(spark, d).collect()
     }
     assert out[0]["n_vectors"] == 4 and out[1]["n_vectors"] == 2
     assert out[0]["mean_cos_to_centroid"] == 1.0
@@ -507,5 +437,6 @@ def test_dispersion_tight_vs_mixed_cluster(spark, tmp_path):
     # each orthogonal member is at 45 degrees to the (0.5, 0.5) centroid
     assert abs(out[1]["mean_cos_to_centroid"] - 0.707107) < 1e-6
     assert out[1]["mean_cos_to_centroid"] < 0.75
-    _compare_staged(spark, "emb_intra_class_dispersion", d,
-                    con=_fixture_conn(d, ["embeddings"]))
+    compare_query(
+        spark, "emb_intra_class_dispersion", d, con=duckdb_conn(d, ["embeddings"])
+    )

@@ -1,94 +1,17 @@
-"""datapipe16 queries (staged for round-8 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint."""
+"""datapipe16 adversarial fixtures, run through both engines where the
+query has an oracle (the fixture parquet dir doubles as an sf_dir),
+plus hand-computed expectations. Registry-wide oracle parity and plan
+shape are checked by test_correctness.py and test_plan_lint.py."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 
-from cqdg_etl_spark.queries.datapipe16 import STAGED
-from tests.oracle_harness import canonical_rows, duckdb_conn
+from cqdg_etl_spark.queries import REGISTRY
+from tests.oracle_harness import compare_query, duckdb_conn, fixture_dir
 
-
-def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
-    actual = q.fn(spark, sf_dir).toPandas()
-    con = con or duckdb_conn(sf_dir)
-    expected = con.execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns), name
-    assert len(actual) == len(expected), (
-        f"{name}: rows spark={len(actual)} oracle={len(expected)}"
-    )
-    a, e = canonical_rows(actual), canonical_rows(expected)
-    if a != e:
-        only_a = [r for r in a if r not in set(e)][:5]
-        only_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch.\n only-spark: {only_a}\n"
-            f" only-oracle: {only_e}"
-        )
-
-
-def test_staged_not_published():
-    """Round-8 publication flipped: every datapipe16 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13/14/15 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe16 name {name!r} not published into REGISTRY"
-        )
-
-
-def test_staged_batch_size():
-    assert len(STAGED) == 5
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match(spark, sf_dir, name):
-    _compare_staged(spark, name, sf_dir)
-
-
-# ---------------------------------------------------------- plan lint
-
-_FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
-              "BatchEvalPython ")
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    for node in _FORBIDDEN:
-        assert node not in plan, f"{name}: {node} in physical plan\n{plan}"
-
-
-# ----------------------------------------------------- fixture helpers
-
-
-def _fixture_dir(spark, tmp_path, **tables) -> str:
-    d = str(tmp_path / "fx")
-    for name, df in tables.items():
-        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{name}.parquet")
-    return d
-
-
-def _fixture_conn(sf_dir: str, tables) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet/*.parquet'"
-        )
-    return con
+pytestmark = pytest.mark.nightly
 
 
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars int"
@@ -111,7 +34,7 @@ def test_rerank_sanity_and_shortlist_monotonicity(spark, sf_dir):
     from cqdg_etl_spark.queries.registry import load
     from pyspark.sql import functions as F
 
-    approx = STAGED["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()
+    approx = REGISTRY["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()
     exact = REGISTRY["ann_topk_bruteforce"].fn(spark, sf_dir).collect()
     ap = {(r["query_id"], r["neighbor_id"]) for r in approx}
     ex = {(r["query_id"], r["neighbor_id"]) for r in exact}
@@ -171,8 +94,12 @@ def test_rerank_recall_on_clustered_data(spark):
 
 
 def test_rerank_deterministic(spark, sf_dir):
-    a = sorted(map(tuple, STAGED["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()))
-    b = sorted(map(tuple, STAGED["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect()))
+    a = sorted(
+        map(tuple, REGISTRY["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect())
+    )
+    b = sorted(
+        map(tuple, REGISTRY["ann_topk_ivf_pq_rerank"].fn(spark, sf_dir).collect())
+    )
     assert a == b
 
 
@@ -189,15 +116,16 @@ def test_calibration_identical_docs_bucket10(spark, tmp_path):
         [(1, a, "en", "s0", 1), (2, a, "en", "s0", 1), (3, b, "en", "s0", 1)],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
-    rows = STAGED["dd_minhash_calibration"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, documents=docs)
+    rows = REGISTRY["dd_minhash_calibration"].fn(spark, d).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["bucket"], r["n_pairs"]) == (10, 1)
     assert r["mean_est"] == 1.0 and r["mean_exact"] == 1.0
     assert r["mean_abs_err"] == 0.0
-    _compare_staged(spark, "dd_minhash_calibration", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "dd_minhash_calibration", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # --------------------------------------------- dup-cluster size profile
@@ -215,15 +143,16 @@ def test_cluster_profile_sizes_and_invariant(spark, tmp_path):
          (6, c, "en", "s0", 1)],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     hist = {
         r["cluster_size"]: r["n_clusters"]
-        for r in STAGED["dd_dup_cluster_size_profile"].fn(spark, d).collect()
+        for r in REGISTRY["dd_dup_cluster_size_profile"].fn(spark, d).collect()
     }
     assert hist == {3: 1, 2: 1, 1: 1}
     assert sum(s * n for s, n in hist.items()) == 6
-    _compare_staged(spark, "dd_dup_cluster_size_profile", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "dd_dup_cluster_size_profile", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 def test_cluster_profile_corpus_invariant(spark, sf_dir):
@@ -231,7 +160,7 @@ def test_cluster_profile_corpus_invariant(spark, sf_dir):
 
     hist = {
         r["cluster_size"]: r["n_clusters"]
-        for r in STAGED["dd_dup_cluster_size_profile"].fn(spark, sf_dir).collect()
+        for r in REGISTRY["dd_dup_cluster_size_profile"].fn(spark, sf_dir).collect()
     }
     n_docs = _d.connect().execute(
         f"SELECT count(*) FROM '{sf_dir}/documents.parquet'"
@@ -261,10 +190,10 @@ def test_robust_zscore_planted_spike(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    d = _fixture_dir(spark, tmp_path, events=ev)
+    d = fixture_dir(tmp_path, events=ev)
     out = {
         r["event_type"]: r
-        for r in STAGED["pf_robust_zscore_event_value"].fn(spark, d).collect()
+        for r in REGISTRY["pf_robust_zscore_event_value"].fn(spark, d).collect()
     }
     assert out["click"]["median_cents"] == 1000
     assert out["click"]["mad_cents"] == 0
@@ -272,8 +201,9 @@ def test_robust_zscore_planted_spike(spark, tmp_path):
     assert out["view"]["median_cents"] == 700
     assert out["view"]["mad_cents"] == 300
     assert out["view"]["n_outliers"] == 1  # only the 10000.0
-    _compare_staged(spark, "pf_robust_zscore_event_value", d,
-                    con=_fixture_conn(d, ["events"]))
+    compare_query(
+        spark, "pf_robust_zscore_event_value", d, con=duckdb_conn(d, ["events"])
+    )
 
 
 # --------------------------------------------- JS divergence
@@ -291,14 +221,15 @@ def test_js_divergence_bounds_and_edges(spark, tmp_path):
          (4, a + " " + b, "en", "s3", 1)],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {
         (r["source_a"], r["source_b"]): r["js"]
-        for r in STAGED["tx_source_js_divergence"].fn(spark, d).collect()
+        for r in REGISTRY["tx_source_js_divergence"].fn(spark, d).collect()
     }
     assert len(out) == 6
     assert out[("s0", "s1")] == 0.0              # identical
     assert out[("s0", "s2")] == 0.693147         # disjoint → ln 2
     assert 0.0 < out[("s0", "s3")] < 0.693147    # half-shared
-    _compare_staged(spark, "tx_source_js_divergence", d,
-                    con=_fixture_conn(d, ["documents"]))
+    compare_query(
+        spark, "tx_source_js_divergence", d, con=duckdb_conn(d, ["documents"])
+    )

@@ -1,132 +1,35 @@
-"""datapipe17 queries (staged for round-9 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint."""
+"""datapipe17 adversarial fixtures, run through both engines where the
+query has an oracle (the fixture parquet dir doubles as an sf_dir),
+plus hand-computed expectations and the sf0.01 oracle re-runs.
+Registry-wide oracle parity and plan shape are checked by
+test_correctness.py and test_plan_lint.py."""
 
 from __future__ import annotations
 
 import datetime as dt
 import math
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from cqdg_etl_spark.queries.datapipe17 import STAGED
-from tests.oracle_harness import canonical_rows, duckdb_conn
+from cqdg_etl_spark.queries import REGISTRY
+from tests.conftest import SF_MEDIUM
+from tests.oracle_harness import (
+    compare_query,
+    duckdb_conn,
+    fixture_dir,
+    module_queries,
+)
+
+pytestmark = pytest.mark.nightly
 
 
-def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
-    actual = q.fn(spark, sf_dir).toPandas()
-    con = con or duckdb_conn(sf_dir)
-    expected = con.execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns), name
-    assert len(actual) == len(expected), (
-        f"{name}: rows spark={len(actual)} oracle={len(expected)}"
-    )
-    a, e = canonical_rows(actual), canonical_rows(expected)
-    if a != e:
-        only_a = [r for r in a if r not in set(e)][:5]
-        only_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch.\n only-spark: {only_a}\n"
-            f" only-oracle: {only_e}"
-        )
-
-
-def test_staged_published():
-    """Round-9 publication flipped: every datapipe17 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13-16 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe17 name {name!r} not published into REGISTRY"
-        )
-
-
-def test_staged_batch_size():
-    assert len(STAGED) == 9
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match(spark, sf_dir, name):
-    _compare_staged(spark, name, sf_dir)
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match_sf_medium(spark, name):
-    """The driver gate compares at sf0.01 — run the same comparison at
-    that SF in CI instead of leaving it to ad-hoc sweeps (round-8
-    institutionalization of the two-SF staging claim)."""
-    from tests.conftest import SF_MEDIUM
-
-    _compare_staged(spark, name, SF_MEDIUM)
-
-
-# ---------------------------------------------------------- plan lint
-
-_FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
-              "BatchEvalPython ")
-
-# Reviewed exceptions, the fleet BNLJ_OK convention (every build side
-# is a 1-row scalar aggregate, so the "quadratic" node is a linear
-# scalar fan-out). Publication must move these into
-# tests/test_plan_lint.py::BNLJ_OK. The lint asserts the node IS
-# present for these names, so a reshaped query must also leave this
-# dict.
-_BNLJ_OK: dict[str, str] = {
-    "ds_curriculum_interleave": "single-row |sources| scalar joined "
-    "onto the ranked corpus for the interleave arithmetic",
-    "ds_stochastic_round_resample": "single-row max(n_chars) scalar "
-    "broadcast into the per-doc weight",
-    "ev_survival_km": "two 1-row scalars (corpus max ts for the "
-    "censor cutoff, total user count for the at-risk complement) "
-    "fanned onto the tiny duration table",
-    "tx_vocab_growth_curve": "single-row total-token-count scalar "
-    "broadcast into the decile bucketing",
-}
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    for node in _FORBIDDEN:
-        if node == "BroadcastNestedLoopJoin" and name in _BNLJ_OK:
-            assert node in plan, (
-                f"{name}: reviewed BNLJ exception no longer applies — "
-                "remove it from _BNLJ_OK"
-            )
-            continue
-        assert node not in plan, f"{name}: {node} in physical plan\n{plan}"
-
-
-# ----------------------------------------------------- fixture helpers
-
-
-def _fixture_dir(spark, tmp_path, **tables) -> str:
-    d = str(tmp_path / "fx")
-    for name, df in tables.items():
-        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{name}.parquet")
-    return d
-
-
-def _fixture_conn(sf_dir: str, tables) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet/*.parquet'"
-        )
-    return con
+@pytest.mark.parametrize(
+    "name", module_queries("cqdg_etl_spark.queries.datapipe17")
+)
+def test_oracle_match_sf_medium(spark, name):
+    """The same oracle comparison test_correctness runs, at sf0.01."""
+    compare_query(spark, name, SF_MEDIUM)
 
 
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars int"
@@ -152,10 +55,10 @@ def test_entropy_hand_computed(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {
         r.source: r.asDict()
-        for r in STAGED["tx_char_entropy_quality"].fn(spark, d).collect()
+        for r in REGISTRY["tx_char_entropy_quality"].fn(spark, d).collect()
     }
     assert out["s1"]["mean_entropy_bits"] == 0.0
     assert out["s1"]["n_low_entropy"] == 1
@@ -171,10 +74,9 @@ def test_entropy_hand_computed(spark, tmp_path):
     assert out["s3"]["mean_entropy_bits"] > 3.5
     assert out["s3"]["n_low_entropy"] == 0
     # engine-vs-oracle on the same fixture
-    con = _fixture_conn(d, ["documents"])
-    e = con.execute(STAGED["tx_char_entropy_quality"].oracle).df()
-    a = STAGED["tx_char_entropy_quality"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(
+        spark, "tx_char_entropy_quality", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ------------------------------------------------ Kaplan-Meier
@@ -195,10 +97,10 @@ def test_km_hand_computed(spark, tmp_path):
         rows.append(ev(i, uid, 0)); i += 1
         rows.append(ev(i, uid, last)); i += 1
     events = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=events)
+    d = fixture_dir(tmp_path, events=events)
     out = {
         r.duration_days: r.asDict()
-        for r in STAGED["ev_survival_km"].fn(spark, d).collect()
+        for r in REGISTRY["ev_survival_km"].fn(spark, d).collect()
     }
     assert set(out) == {10, 20, 98, 100}
     assert out[10]["at_risk"] == 5 and out[10]["deaths"] == 2
@@ -207,10 +109,7 @@ def test_km_hand_computed(spark, tmp_path):
     assert abs(out[20]["survival"] - 0.4) < 2e-6  # two 6dp ln quantizations
     assert out[98]["deaths"] == 0 and out[100]["deaths"] == 0
     assert out[100]["survival"] == out[20]["survival"]  # flat past last death
-    con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_survival_km"].oracle).df()
-    a = STAGED["ev_survival_km"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(spark, "ev_survival_km", d, con=duckdb_conn(d, ["events"]))
 
 
 def test_km_full_extinction_reaches_zero(spark, tmp_path):
@@ -231,10 +130,10 @@ def test_km_full_extinction_reaches_zero(spark, tmp_path):
         rows.append((i, base + dt.timedelta(days=5), uid, "view", 1.0, "{}")); i += 1
     rows.append((i, base + dt.timedelta(days=40), 9, "view", 1.0, "{}")); i += 1
     events = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=events)
+    d = fixture_dir(tmp_path, events=events)
     out = {
         r.duration_days: r.asDict()
-        for r in STAGED["ev_survival_km"].fn(spark, d).collect()
+        for r in REGISTRY["ev_survival_km"].fn(spark, d).collect()
     }
     # t=0: user 9 (censored, duration 0) leaves; at_risk 4, d 0.
     assert out[0]["at_risk"] == 4 and out[0]["deaths"] == 0
@@ -242,10 +141,7 @@ def test_km_full_extinction_reaches_zero(spark, tmp_path):
     # t=5: remaining 3 all die -> d = at_risk -> survival exactly 0.
     assert out[5]["at_risk"] == 3 and out[5]["deaths"] == 3
     assert out[5]["survival"] == 0.0
-    con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_survival_km"].oracle).df()
-    a = STAGED["ev_survival_km"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(spark, "ev_survival_km", d, con=duckdb_conn(d, ["events"]))
 
 
 # ------------------------------------------ curriculum interleave
@@ -265,8 +161,8 @@ def test_curriculum_round_robin(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
-    rows = STAGED["ds_curriculum_interleave"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, documents=docs)
+    rows = REGISTRY["ds_curriculum_interleave"].fn(spark, d).collect()
     by_pos = {r.position: r for r in rows}
     assert sorted(by_pos) == [1, 2, 3, 4, 5, 6]
     # odd positions are source a (s_idx 1), even are b (s_idx 2)
@@ -274,10 +170,9 @@ def test_curriculum_round_robin(spark, tmp_path):
     # easy-first within each source: a by n_chars -> docs 1,3,2
     assert [by_pos[p].doc_id for p in (1, 3, 5)] == [1, 3, 2]
     assert [by_pos[p].doc_id for p in (2, 4, 6)] == [4, 6, 5]
-    con = _fixture_conn(d, ["documents"])
-    e = con.execute(STAGED["ds_curriculum_interleave"].oracle).df()
-    a = STAGED["ds_curriculum_interleave"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(
+        spark, "ds_curriculum_interleave", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # ------------------------------------------------------- HITS
@@ -298,16 +193,15 @@ def test_hits_hand_structure(spark, tmp_path):
         (i, base, uid, t, 1.0, "{}") for i, (uid, t) in enumerate(pairs)
     ]
     events = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=events)
-    out = STAGED["graph_hits_scores"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, events=events)
+    out = REGISTRY["graph_hits_scores"].fn(spark, d).collect()
     scores = {r.user_id: r.hub for r in out}
     assert max(scores, key=scores.get) == 1
     assert scores[1] == 1.0  # max-normalized
     assert scores[5] == min(scores.values())
-    con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["graph_hits_scores"].oracle).df()
-    a = STAGED["graph_hits_scores"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(
+        spark, "graph_hits_scores", d, con=duckdb_conn(d, ["events"])
+    )
 
 
 # --------------------------------------------- peak concurrency
@@ -330,8 +224,8 @@ def test_peak_concurrency_hand_computed(spark, tmp_path):
         ev(5, 4, 10), ev(6, 4, 20),         # D: [10, 20] (starts at A's end)
     ]
     events = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=events)
-    out = STAGED["ev_peak_concurrency"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, events=events)
+    out = REGISTRY["ev_peak_concurrency"].fn(spark, d).collect()
     lvl = {r.peak_t_us: r.concurrency for r in out}
     us = lambda m: int((base + dt.timedelta(minutes=m)).timestamp() * 1e6)
     assert lvl[us(8)] == 3       # A, B, C all active
@@ -341,10 +235,9 @@ def test_peak_concurrency_hand_computed(spark, tmp_path):
     # instant -> A + B + D = 3.
     assert lvl[us(10)] == 3
     assert lvl[us(0)] == 1
-    con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_peak_concurrency"].oracle).df()
-    a = STAGED["ev_peak_concurrency"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(
+        spark, "ev_peak_concurrency", d, con=duckdb_conn(d, ["events"])
+    )
 
 
 # ------------------------------------------- type affinity
@@ -357,16 +250,15 @@ def test_type_affinity_hand_computed(spark, tmp_path):
     pairs = [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a")]
     rows = [(i, base, u, t, 1.0, "{}") for i, (u, t) in enumerate(pairs)]
     events = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=events)
-    out = STAGED["graph_type_affinity"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, events=events)
+    out = REGISTRY["graph_type_affinity"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0]
     assert (r.type_a, r.type_b, r.co_users) == ("a", "b", 2)
     assert abs(r.affinity - math.floor(2 / math.sqrt(6) * 1e6 + 0.5) / 1e6) < 1e-12
-    con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["graph_type_affinity"].oracle).df()
-    a = STAGED["graph_type_affinity"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(
+        spark, "graph_type_affinity", d, con=duckdb_conn(d, ["events"])
+    )
 
 
 # ------------------------------------------- vocabulary growth
@@ -383,9 +275,9 @@ def test_vocab_growth_hand_computed(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {r.decile: r for r in
-           STAGED["tx_vocab_growth_curve"].fn(spark, d).collect()}
+           REGISTRY["tx_vocab_growth_curve"].fn(spark, d).collect()}
     assert sorted(out) == list(range(1, 11))
     assert out[10].cum_tokens == 10 and out[10].cum_vocab == 4
     assert out[1].cum_tokens == 1 and out[1].cum_vocab == 1   # 'a'
@@ -396,10 +288,9 @@ def test_vocab_growth_hand_computed(spark, tmp_path):
     for i in range(2, 11):
         assert out[i].cum_tokens >= out[i - 1].cum_tokens
         assert out[i].cum_vocab >= out[i - 1].cum_vocab
-    con = _fixture_conn(d, ["documents"])
-    e = con.execute(STAGED["tx_vocab_growth_curve"].oracle).df()
-    a = STAGED["tx_vocab_growth_curve"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(
+        spark, "tx_vocab_growth_curve", d, con=duckdb_conn(d, ["documents"])
+    )
 
 
 # --------------------------------------------- DAU/WAU stickiness
@@ -417,18 +308,17 @@ def test_dau_wau_hand_computed(spark, tmp_path):
     events = spark.createDataFrame(
         [ev(0, 1, 1), ev(1, 2, 1), ev(2, 2, 2), ev(3, 3, 9)], _EV_SCHEMA
     )
-    d = _fixture_dir(spark, tmp_path, events=events)
+    d = fixture_dir(tmp_path, events=events)
     out = {r.day: r for r in
-           STAGED["ev_dau_wau_stickiness"].fn(spark, d).collect()}
+           REGISTRY["ev_dau_wau_stickiness"].fn(spark, d).collect()}
     assert sorted(out) == ["2024-03-01", "2024-03-02", "2024-03-09"]
     assert (out["2024-03-01"].dau, out["2024-03-01"].wau) == (2, 2)
     assert (out["2024-03-02"].dau, out["2024-03-02"].wau) == (1, 2)
     assert out["2024-03-02"].stickiness == 0.5
     assert (out["2024-03-09"].dau, out["2024-03-09"].wau) == (1, 1)
-    con = _fixture_conn(d, ["events"])
-    e = con.execute(STAGED["ev_dau_wau_stickiness"].oracle).df()
-    a = STAGED["ev_dau_wau_stickiness"].fn(spark, d).toPandas()
-    assert canonical_rows(a) == canonical_rows(e)
+    compare_query(
+        spark, "ev_dau_wau_stickiness", d, con=duckdb_conn(d, ["events"])
+    )
 
 
 # ------------------------------------------- stochastic rounding
@@ -439,7 +329,7 @@ def test_resample_expected_count_bounds(spark, sf_dir):
     exactly the target weight, and the realized total sits within a
     loose Chernoff-ish band of the expected total (the estimator is a
     sum of independent-ish Bernoullis)."""
-    rows = STAGED["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
+    rows = REGISTRY["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
     tot_w = sum(r.weight for r in rows)
     tot_c = sum(r.n_copies for r in rows)
     for r in rows:
@@ -451,10 +341,10 @@ def test_resample_expected_count_bounds(spark, sf_dir):
 def test_resample_deterministic_rerun(spark, sf_dir):
     a = sorted(
         (r.doc_id, r.n_copies)
-        for r in STAGED["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
+        for r in REGISTRY["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
     )
     b = sorted(
         (r.doc_id, r.n_copies)
-        for r in STAGED["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
+        for r in REGISTRY["ds_stochastic_round_resample"].fn(spark, sf_dir).collect()
     )
     assert a == b

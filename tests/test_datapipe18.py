@@ -1,10 +1,8 @@
-"""datapipe18 queries (staged for round-10 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint (_BNLJ_OK → BNLJ_OK, _GLOBAL_WINDOW_OK →
-GLOBAL_WINDOW_OK — the orphan test enforces both copies)."""
+"""datapipe18 adversarial fixtures, run through both engines where the
+query has an oracle (the fixture parquet dir doubles as an sf_dir),
+plus hand-computed expectations and the sf0.01 oracle re-runs.
+Registry-wide oracle parity and plan shape are checked by
+test_correctness.py and test_plan_lint.py."""
 
 from __future__ import annotations
 
@@ -12,120 +10,19 @@ import math
 
 import pytest
 
-from cqdg_etl_spark.queries.datapipe18 import STAGED
-from tests.oracle_harness import canonical_rows, duckdb_conn
+from cqdg_etl_spark.queries import REGISTRY
+from tests.conftest import SF_MEDIUM
+from tests.oracle_harness import compare_query, fixture_dir, module_queries
+
+pytestmark = pytest.mark.nightly
 
 
-def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
-    actual = q.fn(spark, sf_dir).toPandas()
-    con = con or duckdb_conn(sf_dir)
-    expected = con.execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns), name
-    assert len(actual) == len(expected), (
-        f"{name}: rows spark={len(actual)} oracle={len(expected)}"
-    )
-    a, e = canonical_rows(actual), canonical_rows(expected)
-    if a != e:
-        only_a = [r for r in a if r not in set(e)][:5]
-        only_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch.\n only-spark: {only_a}\n"
-            f" only-oracle: {only_e}"
-        )
-
-
-def test_staged_published():
-    """Round-10 publication flipped: every datapipe18 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13-17 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe18 name {name!r} not published into REGISTRY"
-        )
-
-
-def test_staged_batch_size():
-    assert len(STAGED) == 8
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match(spark, sf_dir, name):
-    _compare_staged(spark, name, sf_dir)
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match_sf_medium(spark, name):
-    """The driver gate compares at sf0.01 — run the same comparison at
-    that SF in CI instead of leaving it to ad-hoc sweeps (round-8
-    institutionalization of the two-SF staging claim)."""
-    from tests.conftest import SF_MEDIUM
-
-    _compare_staged(spark, name, SF_MEDIUM)
-
-
-# ---------------------------------------------------------- plan lint
-
-_FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
-              "BatchEvalPython ")
-
-# Reviewed exceptions, the fleet BNLJ_OK convention (every build side
-# is a 1-row scalar aggregate or a bounded constant-domain frame, so
-# the "quadratic" node is a linear scalar fan-out). Publication must
-# move these into tests/test_plan_lint.py::BNLJ_OK (enforced by
-# test_no_orphaned_staged_exceptions). The lint asserts the node IS
-# present for these names, so a reshaped query must also leave this
-# dict.
-_BNLJ_OK: dict[str, str] = {
-    "fe_woe_information_value": "single-row (G, B) totals scalar "
-    "fanned onto the 5-row category frame",
-    "graph_modularity_brands": "single-row edge-count scalar fanned "
-    "onto the bounded community frame",
-    "pf_column_mutual_information": "single-row grand-total scalar "
-    "fanned onto the bounded joint-cell frame (one per column pair)",
-    "ret_ndcg_eval": "fixed 10-row rank grid range-joined to the "
-    "<=4-row relevance-level histogram (IDCG ideal assignment) plus "
-    "the histogram's own <=4x4 cumulative self-join",
-}
-
-# Reviewed bounded global windows (the fleet GLOBAL_WINDOW_OK
-# convention — Benford's 9 digits / PSI's 10 bins precedent).
-# Publication must move these into
-# tests/test_plan_lint.py::GLOBAL_WINDOW_OK.
-_GLOBAL_WINDOW_OK: dict[str, str] = {
-    "ret_ndcg_eval": "two cumulative sums over the fixed 10-row rank "
-    "grid (DCG and IDCG at each cutoff)",
-}
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    for node in _FORBIDDEN:
-        if node == "BroadcastNestedLoopJoin" and name in _BNLJ_OK:
-            assert node in plan, (
-                f"{name}: reviewed BNLJ exception no longer applies — "
-                "remove it from _BNLJ_OK"
-            )
-            continue
-        assert node not in plan, f"{name}: {node} in physical plan\n{plan}"
-
-
-# ----------------------------------------------------- fixture helpers
-
-
-def _fixture_dir(spark, tmp_path, **tables) -> str:
-    d = str(tmp_path / "fx")
-    for name, df in tables.items():
-        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{name}.parquet")
-    return d
+@pytest.mark.parametrize(
+    "name", module_queries("cqdg_etl_spark.queries.datapipe18")
+)
+def test_oracle_match_sf_medium(spark, name):
+    """The same oracle comparison test_correctness runs, at sf0.01."""
+    compare_query(spark, name, SF_MEDIUM)
 
 
 _ORD_SCHEMA = (
@@ -163,9 +60,9 @@ def test_woe_hand_computed(spark, tmp_path):
                          dt.datetime(2024, 1, 1), prio))
             k += 1
     orders = spark.createDataFrame(rows, _ORD_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, orders=orders)
+    d = fixture_dir(tmp_path, orders=orders)
     out = {r.category: r.asDict()
-           for r in STAGED["fe_woe_information_value"].fn(spark, d).collect()}
+           for r in REGISTRY["fe_woe_information_value"].fn(spark, d).collect()}
     woe_u = _q6(math.log((3.5 / 4) / (1.5 / 4)))
     assert out["1-URGENT"]["woe"] == woe_u
     assert out["1-URGENT"]["iv_term"] == _q6((3.5 / 4 - 1.5 / 4) * woe_u)
@@ -189,8 +86,8 @@ def test_changepoint_level_shift(spark, tmp_path):
         rows.append((day, dt.datetime(2024, 1, 1 + day, 12), 1,
                      "click", v, "{}"))
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
-    out = STAGED["ev_changepoint_cusum"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, events=ev)
+    out = REGISTRY["ev_changepoint_cusum"].fn(spark, d).collect()
     assert len(out) == 1
     r = out[0].asDict()
     assert r["cp_day"] == "2024-01-10"  # last day of the low regime
@@ -209,8 +106,8 @@ def test_changepoint_tie_breaks_earliest(spark, tmp_path):
         rows.append((day, dt.datetime(2024, 2, 1 + day, 6), 1,
                      "view", v, "{}"))
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
-    r = STAGED["ev_changepoint_cusum"].fn(spark, d).collect()[0].asDict()
+    d = fixture_dir(tmp_path, events=ev)
+    r = REGISTRY["ev_changepoint_cusum"].fn(spark, d).collect()[0].asDict()
     # mean = 10; prefix sums of (v-10): -5, 0, -5, 0, -5, 0 — max |S|
     # = 5 first reached on day 1.
     assert r["cp_day"] == "2024-02-01"
@@ -238,9 +135,9 @@ def test_modularity_two_triangles(spark, tmp_path):
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
     )
-    d = _fixture_dir(spark, tmp_path, lineitem=li, part=part)
+    d = fixture_dir(tmp_path, lineitem=li, part=part)
     out = {r.label: r.asDict()
-           for r in STAGED["graph_modularity_brands"].fn(spark, d).collect()}
+           for r in REGISTRY["graph_modularity_brands"].fn(spark, d).collect()}
     expect = _q6(3.0 / 7.0 - (7.0 / 14.0) ** 2)
     for lab in ("X", "Y"):
         assert out[lab]["n_nodes"] == 3
@@ -267,9 +164,9 @@ def test_bfs_path_graph(spark, tmp_path):
         li_rows.append((i, a))
         li_rows.append((i, b))
     li = spark.createDataFrame(li_rows, _LI_COLS)
-    d = _fixture_dir(spark, tmp_path, lineitem=li)
+    d = fixture_dir(tmp_path, lineitem=li)
     out = {r.node: r.hop
-           for r in STAGED["graph_bfs_hops"].fn(spark, d).collect()}
+           for r in REGISTRY["graph_bfs_hops"].fn(spark, d).collect()}
     for n in range(1, 11):
         assert out[n] == 0  # every clique node is a source
     assert out[20] == 1 and out[21] == 2 and out[22] == 3
@@ -291,9 +188,9 @@ def test_ndcg_hand_computed(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     rows = sorted(
-        (r.asDict() for r in STAGED["ret_ndcg_eval"].fn(spark, d).collect()),
+        (r.asDict() for r in REGISTRY["ret_ndcg_eval"].fn(spark, d).collect()),
         key=lambda r: r["rank"],
     )
     # Retrieved order: doc 3 (4 rare terms), doc 2 (2 terms), doc 1.
@@ -316,12 +213,9 @@ def test_ndcg_penalizes_inversion(spark, tmp_path):
     corpus-ideal gain sequence."""
     docs = [(1, "filter", "en", "s", 6)]
     docs += [(i, "merge scan", "en", "s", 10) for i in range(2, 8)]
-    d = _fixture_dir(
-        spark, tmp_path,
-        documents=spark.createDataFrame(docs, _DOC_SCHEMA),
-    )
+    d = fixture_dir(tmp_path, documents=spark.createDataFrame(docs, _DOC_SCHEMA))
     rows = sorted(
-        (r.asDict() for r in STAGED["ret_ndcg_eval"].fn(spark, d).collect()),
+        (r.asDict() for r in REGISTRY["ret_ndcg_eval"].fn(spark, d).collect()),
         key=lambda r: r["rank"],
     )
     by_rank = {r["rank"]: r for r in rows}
@@ -362,9 +256,9 @@ def test_mi_independent_and_dependent(spark, tmp_path):
                              et, 10.0, "{}"))
                 eid += 1
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
+    d = fixture_dir(tmp_path, events=ev)
     out = {r.pair: r.asDict()
-           for r in STAGED["pf_column_mutual_information"].fn(spark, d)
+           for r in REGISTRY["pf_column_mutual_information"].fn(spark, d)
            .collect()}
     assert out["event_type|hour"]["mi_nats"] == 0.0
     assert out["event_type|vbucket"]["mi_nats"] == 0.0
@@ -377,9 +271,9 @@ def test_mi_independent_and_dependent(spark, tmp_path):
     ):
         rows2.append((eid2, dt.datetime(2024, 3, 2, 5), 1, et, v, "{}"))
     ev2 = spark.createDataFrame(rows2, _EV_SCHEMA)
-    d2 = _fixture_dir(spark, tmp_path.joinpath("b"), events=ev2)
+    d2 = fixture_dir(tmp_path.joinpath("b"), events=ev2)
     out2 = {r.pair: r.asDict()
-            for r in STAGED["pf_column_mutual_information"].fn(spark, d2)
+            for r in REGISTRY["pf_column_mutual_information"].fn(spark, d2)
             .collect()}
     # Two cells, each q6(0.5 * ln 2); exact decimal sum.
     assert out2["event_type|vbucket"]["mi_nats"] == round(
@@ -406,9 +300,9 @@ def test_attribution_linear_split_and_window(spark, tmp_path):
         (6, p_ts - dt.timedelta(days=1), 8, "view", 1.0, '{"k": 0}'),
     ]
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
+    d = fixture_dir(tmp_path, events=ev)
     out = {(r.channel, r.campaign): r.asDict()
-           for r in STAGED["ev_attribution_linear"].fn(spark, d).collect()}
+           for r in REGISTRY["ev_attribution_linear"].fn(spark, d).collect()}
     assert set(out) == {("view", 0), ("click", 1)}
     assert out[("view", 0)]["credited_conversions"] == 0.5
     assert out[("view", 0)]["credited_value"] == 50.0
@@ -429,8 +323,8 @@ def test_dhash_fake_kernel_matches_python(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, text, "en", "s", 19)], _DOC_SCHEMA
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
-    row = STAGED["mm_image_dhash_index"].fn(spark, d).collect()[0].asDict()
+    d = fixture_dir(tmp_path, documents=docs)
+    row = REGISTRY["mm_image_dhash_index"].fn(spark, d).collect()[0].asDict()
 
     h = hashlib.md5(text.encode()).hexdigest()
     hexcat = h

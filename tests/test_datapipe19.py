@@ -1,10 +1,8 @@
-"""datapipe19 queries (staged for round-11 publication): full local
-verification against the DuckDB oracles — the same comparison the
-driver gate runs — plus adversarial fixtures run through BOTH engines
-and hand-computed expectations. A staged-scope plan lint mirrors
-tests/test_plan_lint.py until publication moves these names under the
-fleet-wide lint (_BNLJ_OK → BNLJ_OK; the orphan test enforces the
-copy)."""
+"""datapipe19 adversarial fixtures, run through both engines where the
+query has an oracle (the fixture parquet dir doubles as an sf_dir),
+plus hand-computed expectations and the sf0.01 oracle re-runs.
+Registry-wide oracle parity and plan shape are checked by
+test_correctness.py and test_plan_lint.py."""
 
 from __future__ import annotations
 
@@ -12,106 +10,19 @@ import math
 
 import pytest
 
-from cqdg_etl_spark.queries.datapipe19 import STAGED
-from tests.oracle_harness import canonical_rows, duckdb_conn
+from cqdg_etl_spark.queries import REGISTRY
+from tests.conftest import SF_MEDIUM
+from tests.oracle_harness import compare_query, fixture_dir, module_queries
+
+pytestmark = pytest.mark.nightly
 
 
-def _compare_staged(spark, name: str, sf_dir: str, con=None) -> None:
-    q = STAGED[name]
-    actual = q.fn(spark, sf_dir).toPandas()
-    con = con or duckdb_conn(sf_dir)
-    expected = con.execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns), name
-    assert len(actual) == len(expected), (
-        f"{name}: rows spark={len(actual)} oracle={len(expected)}"
-    )
-    a, e = canonical_rows(actual), canonical_rows(expected)
-    if a != e:
-        only_a = [r for r in a if r not in set(e)][:5]
-        only_e = [r for r in e if r not in set(a)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch.\n only-spark: {only_a}\n"
-            f" only-oracle: {only_e}"
-        )
-
-
-def test_staged_published():
-    """Round-11 publication flipped: every datapipe19 name is now bound
-    in the published registry to the SAME Query object (the
-    datapipe13-18 publication discipline)."""
-    from cqdg_etl_spark.queries import REGISTRY
-
-    for name, q in STAGED.items():
-        assert REGISTRY.get(name) is q, (
-            f"datapipe19 name {name!r} not published into REGISTRY"
-        )
-
-
-def test_staged_batch_size():
-    assert len(STAGED) == 8
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match(spark, sf_dir, name):
-    _compare_staged(spark, name, sf_dir)
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_oracle_match_sf_medium(spark, name):
-    """The driver gate compares at sf0.01 — run the same comparison at
-    that SF in CI instead of leaving it to ad-hoc sweeps (round-8
-    institutionalization of the two-SF staging claim)."""
-    from tests.conftest import SF_MEDIUM
-
-    _compare_staged(spark, name, SF_MEDIUM)
-
-
-# ---------------------------------------------------------- plan lint
-
-_FORBIDDEN = ("CartesianProduct", "BroadcastNestedLoopJoin",
-              "BatchEvalPython ")
-
-# Reviewed exceptions, the fleet BNLJ_OK convention. Publication must
-# move these into tests/test_plan_lint.py::BNLJ_OK (enforced by
-# test_no_orphaned_staged_exceptions).
-_BNLJ_OK: dict[str, str] = {
-    "emb_matryoshka_recall": "the two exact arms are the documented "
-    "brute-force baseline (10-query broadcast side crossJoin — the "
-    "ann_topk_bruteforce whitelist rationale)",
-    "ev_markov_stationary": "1-row renormalization scalar per power "
-    "iteration plus the 1-row type-count scalar, fanned onto the "
-    "|types|-bounded frame",
-    "tx_rake_keywords": "single-row corpus doc-count scalar fanned "
-    "onto the vocabulary frame for the stopword threshold",
-}
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_plan_lint(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "extended"
-        )
-    )
-    for node in _FORBIDDEN:
-        if node == "BroadcastNestedLoopJoin" and name in _BNLJ_OK:
-            assert node in plan, (
-                f"{name}: reviewed BNLJ exception no longer applies — "
-                "remove it from _BNLJ_OK"
-            )
-            continue
-        assert node not in plan, f"{name}: {node} in physical plan\n{plan}"
-
-
-# ----------------------------------------------------- fixture helpers
-
-
-def _fixture_dir(spark, tmp_path, **tables) -> str:
-    d = str(tmp_path / "fx")
-    for name, df in tables.items():
-        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{name}.parquet")
-    return d
+@pytest.mark.parametrize(
+    "name", module_queries("cqdg_etl_spark.queries.datapipe19")
+)
+def test_oracle_match_sf_medium(spark, name):
+    """The same oracle comparison test_correctness runs, at sf0.01."""
+    compare_query(spark, name, SF_MEDIUM)
 
 
 _EV_SCHEMA = (
@@ -153,9 +64,9 @@ def test_matryoshka_deterministic_ties(spark, tmp_path):
         v = np.concatenate([head, 0.5 * tail])
         rows.append((i, [float(x) for x in v], 0))
     emb = spark.createDataFrame(rows, _EMB_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, embeddings=emb)
+    d = fixture_dir(tmp_path, embeddings=emb)
     out = {r.query_id: r.asDict()
-           for r in STAGED["emb_matryoshka_recall"].fn(spark, d).collect()}
+           for r in REGISTRY["emb_matryoshka_recall"].fn(spark, d).collect()}
     assert set(out) == {0}
     # Full top-10 = ids 10..19 (tail +); truncated top-10 = ids 10..19
     # (head ties broken by lowest id) — so recall is exactly 1.0 here;
@@ -187,8 +98,8 @@ def test_matryoshka_partial_overlap(spark, tmp_path):
         v = np.concatenate([head_b, tail_b])
         rows.append((i, [float(x) for x in v], 0))
     emb = spark.createDataFrame(rows, _EMB_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, embeddings=emb)
-    out = STAGED["emb_matryoshka_recall"].fn(spark, d).collect()[0].asDict()
+    d = fixture_dir(tmp_path, embeddings=emb)
+    out = REGISTRY["emb_matryoshka_recall"].fn(spark, d).collect()[0].asDict()
     # Full top-10: 5 B (20..24) + the 5 lowest-id A (10..14).
     # Truncated top-10: A ties → ids 10..19. Overlap = {10..14}.
     assert out["n_overlap"] == 5 and out["recall"] == 0.5
@@ -208,9 +119,9 @@ def test_markov_two_state_alternator(spark, tmp_path):
         et = "click" if i % 2 == 0 else "view"
         rows.append((i, dt.datetime(2024, 1, 1, 0, i), 1, et, 1.0, "{}"))
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
+    d = fixture_dir(tmp_path, events=ev)
     out = {r.event_type: r.asDict()
-           for r in STAGED["ev_markov_stationary"].fn(spark, d).collect()}
+           for r in REGISTRY["ev_markov_stationary"].fn(spark, d).collect()}
     assert out["click"]["pi"] == 0.5 and out["view"]["pi"] == 0.5
     assert out["click"]["empirical"] == 0.5
 
@@ -225,9 +136,9 @@ def test_markov_absorbing_bias(spark, tmp_path):
     rows = [(i, dt.datetime(2024, 2, 1, 0, i), 1, et, 1.0, "{}")
             for i, et in enumerate(seq)]
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
+    d = fixture_dir(tmp_path, events=ev)
     out = {r.event_type: r.asDict()
-           for r in STAGED["ev_markov_stationary"].fn(spark, d).collect()}
+           for r in REGISTRY["ev_markov_stationary"].fn(spark, d).collect()}
 
     # Python mirror of the engine arithmetic (6-dp quantized P and pi,
     # exact sums via Fraction-free float on small values is safe here
@@ -267,8 +178,8 @@ def test_gini_equal_and_skewed(spark, tmp_path):
             rows.append((eid, dt.datetime(2024, 1, 1), u, "view", 1.0, "{}"))
             eid += 1
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
-    r = STAGED["ev_user_gini"].fn(spark, d).collect()[0].asDict()
+    d = fixture_dir(tmp_path, events=ev)
+    r = REGISTRY["ev_user_gini"].fn(spark, d).collect()[0].asDict()
     assert r["gini"] == 0.0 and r["n_users"] == 4 and r["total_events"] == 12
 
     rows2 = []
@@ -278,8 +189,8 @@ def test_gini_equal_and_skewed(spark, tmp_path):
             rows2.append((eid, dt.datetime(2024, 1, 2), u, "view", 1.0, "{}"))
             eid += 1
     ev2 = spark.createDataFrame(rows2, _EV_SCHEMA)
-    d2 = _fixture_dir(spark, tmp_path.joinpath("b"), events=ev2)
-    r2 = STAGED["ev_user_gini"].fn(spark, d2).collect()[0].asDict()
+    d2 = fixture_dir(tmp_path.joinpath("b"), events=ev2)
+    r2 = REGISTRY["ev_user_gini"].fn(spark, d2).collect()[0].asDict()
     assert r2["gini"] == _q6(2 * 34 / (4 * 10) - 5 / 4)  # 0.45
 
 
@@ -301,9 +212,9 @@ def test_autocorr_alternating_series(spark, tmp_path):
                          "click", 1.0, "{}"))
             eid += 1
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
+    d = fixture_dir(tmp_path, events=ev)
     out = {(r.event_type, r.lag): r.asDict()
-           for r in STAGED["pf_autocorr_daily"].fn(spark, d).collect()}
+           for r in REGISTRY["pf_autocorr_daily"].fn(spark, d).collect()}
     assert out[("click", 1)]["r_autocorr"] == _q6(-9 / 10)
     assert out[("click", 1)]["n_pairs"] == 9
     assert out[("click", 7)]["r_autocorr"] == _q6(-3 / 10)
@@ -327,9 +238,9 @@ def test_rake_hand_computed(spark, tmp_path):
         ],
         _DOC_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, documents=docs)
+    d = fixture_dir(tmp_path, documents=docs)
     out = {r.word: r.asDict()
-           for r in STAGED["tx_rake_keywords"].fn(spark, d).collect()}
+           for r in REGISTRY["tx_rake_keywords"].fn(spark, d).collect()}
     assert "the" not in out and "sat" not in out  # stopwords (df 100%)
     assert out["cat"]["deg"] == 4 and out["cat"]["freq"] == 2
     assert out["cat"]["score"] == 2.0
@@ -351,8 +262,8 @@ def test_neighbor_jaccard_perfect_twin(spark, tmp_path):
         li_rows.append((i, a))
         li_rows.append((i, b))
     li = spark.createDataFrame(li_rows, _LI_COLS)
-    d = _fixture_dir(spark, tmp_path, lineitem=li)
-    rows = STAGED["graph_neighbor_jaccard"].fn(spark, d).collect()
+    d = fixture_dir(tmp_path, lineitem=li)
+    rows = REGISTRY["graph_neighbor_jaccard"].fn(spark, d).collect()
     top = rows[0].asDict()
     assert (top["a"], top["b"]) == (1, 4)
     assert top["common"] == 2 and top["jaccard"] == 1.0
@@ -386,10 +297,10 @@ def test_fk_audit_containment(spark, tmp_path):
          (1, dt.datetime(2024, 1, 1), 999, "view", 1.0, "{}")],
         _EV_SCHEMA,
     )
-    d = _fixture_dir(spark, tmp_path, lineitem=li, part=part,
+    d = fixture_dir(tmp_path, lineitem=li, part=part,
                      orders=orders, customer=customer, events=ev)
     out = {r.relation: r.asDict()
-           for r in STAGED["pf_fk_candidate_audit"].fn(spark, d).collect()}
+           for r in REGISTRY["pf_fk_candidate_audit"].fn(spark, d).collect()}
     li_part = out["lineitem.l_partkey->part.p_partkey"]
     assert li_part["n_child_distinct"] == 3
     assert li_part["n_matched"] == 2
@@ -417,8 +328,8 @@ def test_poisson_burst_single_spike(spark, tmp_path):
                          "error", 1.0, "{}"))
             eid += 1
     ev = spark.createDataFrame(rows, _EV_SCHEMA)
-    d = _fixture_dir(spark, tmp_path, events=ev)
-    r = STAGED["ev_poisson_burst_days"].fn(spark, d).collect()[0].asDict()
+    d = fixture_dir(tmp_path, events=ev)
+    r = REGISTRY["ev_poisson_burst_days"].fn(spark, d).collect()[0].asDict()
     assert r["lambda_daily"] == 19.0
     assert r["n_burst_days"] == 1
     assert r["max_daily"] == 100

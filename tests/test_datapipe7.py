@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.nightly
 
 
 # ------------------------------------------------------------ psi_drift

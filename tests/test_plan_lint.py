@@ -116,7 +116,7 @@ BNLJ_OK: dict[str, str] = {
     # q15_top_supplier needs no entry: its scalar-max crossJoin +
     # equality filter is rewritten by Catalyst into a broadcast HASH
     # join on (units = mx) — no BNLJ in the plan at all.
-    # -- datapipe13 batch (published round 5; reviewed while staged) --
+    # -- datapipe13 batch --
     "emb_covariance_cells": "1-row corpus-count scalar broadcast onto "
     "the d² covariance cells",
     "pf_key_skew_profile": "two 1-row scalar frames (totals × top-10 "
@@ -124,7 +124,7 @@ BNLJ_OK: dict[str, str] = {
     "emb_topk_recall_eval": "inherits ann_topk_bruteforce's reviewed "
     "broadcast-query brute-force baseline (same exception as "
     "ret_hybrid_rrf)",
-    # -- datapipe17 batch (published round 9; reviewed while staged) --
+    # -- datapipe17 batch --
     "ds_curriculum_interleave": "single-row |sources| scalar joined "
     "onto the ranked corpus for the interleave arithmetic",
     "ds_stochastic_round_resample": "single-row max(n_chars) scalar "
@@ -134,7 +134,7 @@ BNLJ_OK: dict[str, str] = {
     "fanned onto the tiny duration table",
     "tx_vocab_growth_curve": "single-row total-token-count scalar "
     "broadcast into the decile bucketing",
-    # -- datapipe18 batch (published round 10; reviewed while staged) --
+    # -- datapipe18 batch --
     "fe_woe_information_value": "single-row (G, B) totals scalar "
     "fanned onto the 5-row category frame",
     "graph_modularity_brands": "single-row edge-count scalar fanned "
@@ -144,7 +144,7 @@ BNLJ_OK: dict[str, str] = {
     "ret_ndcg_eval": "fixed 10-row rank grid range-joined to the "
     "<=4-row relevance-level histogram (IDCG ideal assignment) plus "
     "the histogram's own <=4x4 cumulative self-join",
-    # -- datapipe19 batch (published round 11; reviewed while staged) --
+    # -- datapipe19 batch --
     "emb_matryoshka_recall": "the two exact arms are the documented "
     "brute-force baseline (10-query broadcast side crossJoin — the "
     "ann_topk_bruteforce whitelist rationale)",
@@ -170,7 +170,7 @@ GLOBAL_WINDOW_OK: dict[str, str] = {
     "densified bin frame",
     "ds_temperature_mixture": "share/renormalization windows over the "
     "|sources|-row grouped frame (a handful of sources by construction)",
-    # -- datapipe18 batch (published round 10; reviewed while staged) --
+    # -- datapipe18 batch --
     "ret_ndcg_eval": "two cumulative sums over the fixed 10-row rank "
     "grid (DCG and IDCG at each cutoff)",
 }
@@ -233,49 +233,3 @@ def test_no_antipattern_nodes(spark, sf_dir, name):
             f"physical plan — range-partition via operators/ranking "
             f"or whitelist with a bounded-frame justification\n{plan}"
         )
-
-
-def test_no_orphaned_staged_exceptions():
-    """Mechanical publication hand-off (VERDICT r7 #5): staged batches
-    carry their reviewed plan-shape exceptions in the staged test
-    module's ``_BNLJ_OK`` / ``_GLOBAL_WINDOW_OK`` dicts; publication
-    must copy those entries into the fleet ``BNLJ_OK`` /
-    ``GLOBAL_WINDOW_OK`` above. This test parses every staged test
-    module's literals and fails if any name in one is already
-    PUBLISHED (present in REGISTRY) but missing from the matching
-    fleet list — the forgotten-copy failure mode that previously
-    relied on a human checklist. AST-based on purpose: importing
-    staged test modules here would couple collection order; the dicts
-    are plain literals by convention (implicit string concatenation
-    is folded at parse time, so ``ast.literal_eval`` sees one
-    constant)."""
-    import ast
-    import glob
-    import os
-
-    fleet = {"_BNLJ_OK": BNLJ_OK, "_GLOBAL_WINDOW_OK": GLOBAL_WINDOW_OK}
-    here = os.path.dirname(os.path.abspath(__file__))
-    orphaned = []
-    for path in sorted(glob.glob(os.path.join(here, "test_datapipe*.py"))):
-        tree = ast.parse(open(path).read())
-        for node in ast.walk(tree):
-            targets = []
-            if isinstance(node, ast.Assign):
-                targets = [getattr(t, "id", None) for t in node.targets]
-            elif isinstance(node, ast.AnnAssign):
-                targets = [getattr(node.target, "id", None)]
-            staged_dicts = [t for t in targets if t in fleet]
-            if not staged_dicts or node.value is None:
-                continue
-            fleet_ok = fleet[staged_dicts[0]]
-            staged_ok = ast.literal_eval(node.value)
-            for name in staged_ok:
-                if name in REGISTRY and name not in fleet_ok:
-                    orphaned.append(
-                        (os.path.basename(path), staged_dicts[0], name)
-                    )
-    assert not orphaned, (
-        "published queries whose reviewed plan-shape exception was "
-        f"left behind in a staged module: {orphaned} — copy the "
-        "entries into the matching tests/test_plan_lint.py fleet dict"
-    )

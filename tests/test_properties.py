@@ -15,6 +15,8 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
+pytestmark = pytest.mark.nightly
+
 SETTINGS = dict(
     max_examples=8,
     deadline=None,

@@ -13,9 +13,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-import duckdb
-
-from tests.oracle_harness import canonical_rows
+from tests.oracle_harness import compare_query, duckdb_conn
 
 
 def _write_events(tmp_path, rows):
@@ -36,21 +34,6 @@ def _write_events(tmp_path, rows):
     return str(tmp_path)
 
 
-def _compare(spark, sf_dir):
-    from cqdg_etl_spark.queries import REGISTRY
-
-    q = REGISTRY["ev_rfm_segments"]
-    actual = q.fn(spark, sf_dir).toPandas()
-    con = duckdb.connect()  # fixture dir has only events.parquet
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'"
-    )
-    expected = con.execute(q.oracle).df()
-    assert sorted(actual.columns) == sorted(expected.columns)
-    assert canonical_rows(actual) == canonical_rows(expected)
-    return actual
-
-
 def test_rfm_all_ties_decided_by_user_id(spark, tmp_path):
     """10 users (n mod 4 != 0), every user identical on all three RFM
     dimensions: buckets are pure user_id tiebreak + the ntile
@@ -63,7 +46,9 @@ def test_rfm_all_ties_decided_by_user_id(spark, tmp_path):
             rows.append((eid, base + dt.timedelta(hours=k), u, "purchase", 10.0))
             eid += 1
     sf = _write_events(tmp_path, rows)
-    out = _compare(spark, sf).sort_values("user_id")
+    out = compare_query(
+        spark, "ev_rfm_segments", sf, con=duckdb_conn(sf, ["events"])
+    ).sort_values("user_id")
     # identical metrics everywhere -> quartile == ntile bucket of the
     # user_id order itself: 10 = 4*2+2, so buckets sized (3,3,2,2)
     want = [1, 1, 1, 2, 2, 2, 3, 3, 4, 4]
@@ -85,4 +70,6 @@ def test_rfm_partial_ties_match_oracle(spark, tmp_path):
             rows.append((eid, ts, u, "purchase", 5.0))  # monetary ties via freq
             eid += 1
     sf = _write_events(tmp_path, rows)
-    _compare(spark, sf)
+    compare_query(
+        spark, "ev_rfm_segments", sf, con=duckdb_conn(sf, ["events"])
+    )

@@ -264,10 +264,9 @@ def _simhash_pairs_64bit(spark, sf_dir: str, scale: int):
 # day-keyed equi-join onto a 7-row offset frame, NOT a range
 # condition); and the md5-uniform stochastic rounding
 # (ds_stochastic_round_resample — one pass, the copy explode is
-# bounded by max expected count). graph_bfs_hops_staged rides along
-# (datapipe18, round-10 publication): the r8 probe read 25.4 s at
-# x10 — confirm the frontier expansion stays linear to x20 BEFORE
-# publishing (VERDICT r8 #4).
+# bounded by max expected count). graph_bfs_hops rides along: the r8
+# probe read 25.4 s at x10 — confirm the frontier expansion stays
+# linear to x20 (VERDICT r8 #4).
 WAVE7 = [
     "tx_char_entropy_quality",
     "ev_survival_km",
@@ -278,22 +277,12 @@ WAVE7 = [
     "tx_vocab_growth_curve",
     "ev_dau_wau_stickiness",
     "ds_stochastic_round_resample",
-    "graph_bfs_hops_staged",
+    "graph_bfs_hops",
 ]
 
 
-def _bfs_hops_staged(spark, sf_dir: str, scale: int):
-    """datapipe18's staged multi-source BFS, probed ahead of its
-    round-10 publication (it is not in REGISTRY yet)."""
-    from cqdg_etl_spark.queries.datapipe18 import STAGED
-
-    return STAGED["graph_bfs_hops"].fn(spark, sf_dir)
-
-
 # Wave 8 (--wave8): the round-10 datapipe18 publications — first
-# post-publication curvature (VERDICT r9 #4) — plus the repaired
-# datapipe23 batch's two Arrow-heavy staged queries, getting their
-# first curves now that they run at all. Superlinearity risks by
+# post-publication curvature (VERDICT r9 #4). Superlinearity risks by
 # shape: the event-stream CUSUM argmax (ev_changepoint_cusum — one
 # range-partitioned cumsum + a 1-row argmax, linear by construction);
 # the labeled co-purchase modularity (graph_modularity_brands — the
@@ -305,11 +294,7 @@ def _bfs_hops_staged(spark, sf_dir: str, scale: int):
 # attribution (ev_attribution_linear — per-user windows, conversion
 # fan-out bounded by the lookback); the dHash index
 # (mm_image_dhash_index — one mapInPandas decode pass + a 4×16-bit
-# band self-join, the SimHash pigeonhole shape); the IVF cell profile
-# (emb_ivf_cell_profile_staged — one skinny fit pass + one Arrow
-# assignment pass + a |cells|-bounded aggregate); and the k-center
-# coreset (ds_kcenter_coreset_staged — k bounded argmax scans, each a
-# full corpus pass: expect ~linear per step, k fixed at 5).
+# band self-join, the SimHash pigeonhole shape).
 # fe_woe_information_value and pf_column_mutual_information read
 # ORDERS, which build_scaled_dir copies as-is — they are probed on
 # the wave-3 TPC-H warehouse fixture instead (--wave8t).
@@ -320,85 +305,11 @@ WAVE8 = [
     "ret_ndcg_eval",
     "ev_attribution_linear",
     "mm_image_dhash_index",
-    "emb_ivf_cell_profile_staged",
-    "ds_kcenter_coreset_staged",
 ]
 
 WAVE8T = [
     "fe_woe_information_value",
     "pf_column_mutual_information",
-]
-
-# Wave 9s (--wave9s): the datapipe25 batch at STAGING time.
-# Superlinearity risks by shape: the stylometric delta makes two
-# corpus token passes (top-k count + source-token count) but every
-# downstream frame is the |sources|x20 grid; CUPED is one per-user
-# aggregate; KMV is a distinct + two bounded windows (the bucketed
-# min-k); retention is distinct (user, week) + bounded-age rollups;
-# Simpson is one (source, token) aggregate. pf_spearman_rho reads
-# ORDERS and probes under the TPC-H warehouse fixture (--wave9t) —
-# its two value-frame cumsums are the only rank machinery.
-WAVE9S = [
-    "cuped_staged",
-    "kmv_staged",
-    "retention_hl_staged",
-    "simpson_staged",
-    "stylo_delta_staged",
-]
-
-WAVE9T = [
-    "spearman_staged",
-]
-
-# Wave 10s (--wave10s): the datapipe26 batch at STAGING time.
-# Superlinearity risks by shape: silhouette is one posexplode
-# aggregate + one Arrow pass against |labels| closure centroids;
-# Katz is 3 fixed edge-join rounds (the pagerank shape — risk is the
-# edge count, linear in replicas); MDE/Holt/Lorenz collapse to
-# user-/calendar-bounded frames. pf_qq_deciles reads ORDERS and
-# probes under the TPC-H warehouse fixture (--wave10t); its exact
-# percentile sorts within the two era groups — the documented exact
-# trade (approx_percentile at 100 TB).
-WAVE10S = [
-    "silhouette_staged",
-    "katz_staged",
-    "mde_staged",
-    "holt_staged",
-    "lorenz_staged",
-]
-
-WAVE10T = [
-    "qq_staged",
-]
-
-# Wave 11s (--wave11s): the datapipe27 batch at STAGING time. All six
-# read replica-fixture tables. Superlinearity risks by shape: the CMS
-# audit's exact side is a full token aggregate (linear) + a
-# depth*width-bounded sketch; everything else collapses to a
-# types/sources/dims-bounded frame after one scan.
-WAVE11S = [
-    "wilson_staged",
-    "effdim_staged",
-    "cms_audit_staged",
-    "neyman_staged",
-    "tukey_staged",
-    "absorption_staged",
-]
-
-# Wave 12s (--wave12s): the datapipe28 batch at STAGING time. All six
-# read replica-fixture tables. Superlinearity risks by shape: the
-# Poisson bootstrap explodes B=100 replicates per event but combines
-# map-side to B partials per partition (expect ~linear with a B
-# constant); DP dispersion and Good-Turing are token aggregates
-# (linear); jackknife/collision/Little's-law collapse to bounded
-# frames after one scan.
-WAVE12S = [
-    "bootstrap_staged",
-    "goodturing_staged",
-    "jackknife_staged",
-    "dp_dispersion_staged",
-    "hash_audit_staged",
-    "littles_staged",
 ]
 
 # Wave 13 (--wave13): the round-11 datapipe19 publications — first
@@ -428,28 +339,6 @@ WAVE13 = [
 
 WAVE13T = [
     "pf_fk_candidate_audit",
-]
-
-# Wave 14s (--wave14s): the datapipe29 bonus batch at STAGING time.
-# Superlinearity risks by shape: all three collapse the events scan
-# to a |days|-bounded daily frame immediately (the periodogram's trig
-# spine joins broadcast on the (period, phase) equi-key; Gumbel is
-# two bounded aggregates; BH is one per-(type, era) rollup + bounded
-# windows). The three orders/lineitem-based names probe under the
-# TPC-H warehouse fixture instead (--wave14t): the Theil-Sen pair
-# frame is |days|² bounded; the histogram audit is one map-side
-# 256-bin histogram + one exact percentile sort (the documented exact
-# trade); the FD audit is six distinct-aggregates, no joins.
-WAVE14S = [
-    "periodogram_staged",
-    "gumbel_staged",
-    "bh_fdr_staged",
-]
-
-WAVE14T = [
-    "theil_sen_staged",
-    "hist_quantile_staged",
-    "fd_audit_staged",
 ]
 
 # Wave 15 (--wave15): round-11 OPTIMIZATION re-probe — the changed
@@ -488,144 +377,12 @@ WAVE15T = [
 ]
 
 
-def _dp23_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe23 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-def _dp25_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe25 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-def _dp26_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe26 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-def _dp27_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe27 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-def _dp28_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe28 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-def _dp24_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe24 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-def _dp20_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe20 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-def _dp29_staged(name: str):
-    def run(spark, sf_dir: str, scale: int):
-        from cqdg_etl_spark.queries.datapipe29 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return run
-
-
-# Wave 8s (--wave8s): the datapipe24 batch, probed at STAGING time
-# (the clustering-coefficient lesson — staged queries get their
-# curves before their publication round). Superlinearity risks by
-# shape: the Heaps fit rides tx_vocab_growth_curve's whole token
-# explode + two range-partitioned cumsums (honest slope ~0.55 in
-# SCALE_PROBE_r09); Mahalanobis explodes 64 dims per vector but both
-# aggregates are hash-keyed and the stats frame is |labels|·d; the
-# Mann-Whitney value frame is bounded by distinct lengths; ACF/Fano/
-# entropy-rate collapse to day- or type-bounded frames immediately.
-# pf_mann_whitney_u reads documents (replicated fixture: fine).
-WAVE8S = [
-    "mw_u_staged",
-    "acf_daily_staged",
-    "fano_staged",
-    "heaps_fit_staged",
-    "mahalanobis_staged",
-    "entropy_rate_staged",
-]
-
-
 # Programmatic series: operator variants that differ from a registered
 # query only by a scale-dependent parameter. fn(spark, sf_dir, scale).
 EXTRA = {
     "semantic_prune_fixed_bits": _semantic_prune_fixed_bits,
     "embedding_pairs_fixed_banding": _embedding_pairs_fixed_banding,
     "simhash_pairs_64bit": _simhash_pairs_64bit,
-    "graph_bfs_hops_staged": _bfs_hops_staged,
-    "emb_ivf_cell_profile_staged": _dp23_staged("emb_ivf_cell_profile"),
-    "ds_kcenter_coreset_staged": _dp23_staged("ds_kcenter_coreset"),
-    "mw_u_staged": _dp24_staged("pf_mann_whitney_u"),
-    "acf_daily_staged": _dp24_staged("ev_acf_daily_counts"),
-    "fano_staged": _dp24_staged("ev_fano_burstiness"),
-    "heaps_fit_staged": _dp24_staged("tx_heaps_law_fit"),
-    "mahalanobis_staged": _dp24_staged("emb_mahalanobis_outliers"),
-    "entropy_rate_staged": _dp24_staged("ev_entropy_rate_markov"),
-    "cuped_staged": _dp25_staged("ev_cuped_adjustment"),
-    "kmv_staged": _dp25_staged("sk_kmv_distinct_users"),
-    "retention_hl_staged": _dp25_staged("ev_retention_halflife"),
-    "simpson_staged": _dp25_staged("tx_simpson_diversity"),
-    "stylo_delta_staged": _dp25_staged("tx_stylometric_delta"),
-    "spearman_staged": _dp25_staged("pf_spearman_rho"),
-    "silhouette_staged": _dp26_staged("emb_silhouette_simplified"),
-    "katz_staged": _dp26_staged("graph_katz_centrality"),
-    "greedy_coverage_staged": _dp20_staged("ds_greedy_coverage"),
-    "periodogram_staged": _dp29_staged("ev_periodogram_daily"),
-    "gumbel_staged": _dp29_staged("ev_gumbel_block_maxima"),
-    "bh_fdr_staged": _dp29_staged("ev_bh_fdr_event_types"),
-    "theil_sen_staged": _dp29_staged("pf_theil_sen_daily_revenue"),
-    "hist_quantile_staged": _dp29_staged("sk_histogram_quantile_audit"),
-    "fd_audit_staged": _dp29_staged("pf_fd_violation_audit"),
-    "mde_staged": _dp26_staged("ev_ab_power_mde"),
-    "holt_staged": _dp26_staged("ev_holt_forecast"),
-    "lorenz_staged": _dp26_staged("ev_lorenz_curve_deciles"),
-    "qq_staged": _dp26_staged("pf_qq_deciles"),
-    "wilson_staged": _dp27_staged("ev_reach_wilson_ci"),
-    "effdim_staged": _dp27_staged("emb_effective_dim_diag"),
-    "cms_audit_staged": _dp27_staged("sk_cms_error_audit"),
-    "neyman_staged": _dp27_staged("ds_neyman_allocation"),
-    "tukey_staged": _dp27_staged("pf_tukey_outlier_rates"),
-    "absorption_staged": _dp27_staged("ev_absorption_3step"),
-    "bootstrap_staged": _dp28_staged("ev_poisson_bootstrap_ci"),
-    "goodturing_staged": _dp28_staged("tx_unseen_mass_good_turing"),
-    "jackknife_staged": _dp28_staged("pf_jackknife_source_sensitivity"),
-    "dp_dispersion_staged": _dp28_staged("tx_word_dispersion_dp"),
-    "hash_audit_staged": _dp28_staged("sk_hash_collision_audit"),
-    "littles_staged": _dp28_staged("ev_littles_law_audit"),
 }
 
 ALL_TABLES = [
@@ -782,100 +539,41 @@ def build_scaled_dir(scale: int) -> str:
     return str(out)
 
 
+# --waveN flag -> (names, probed on the TPC-H warehouse fixture).
+WAVES = {
+    "--wave2": (WAVE2, False),
+    "--wave3": (WAVE3, True),
+    "--wave4": (WAVE4, False),
+    "--wave5": (WAVE5, False),
+    "--wave6": (WAVE6, False),
+    "--wave7": (WAVE7, False),
+    "--wave8": (WAVE8, False),
+    "--wave8t": (WAVE8T, True),
+    "--wave13": (WAVE13, False),
+    "--wave13t": (WAVE13T, True),
+    "--wave15": (WAVE15, False),
+    "--wave15t": (WAVE15T, True),
+}
+
+
 def main() -> int:
     args = sys.argv[1:]
-    wave2 = "--wave2" in args
-    wave3 = "--wave3" in args
-    wave4 = "--wave4" in args
-    wave5 = "--wave5" in args
-    wave6 = "--wave6" in args
-    wave7 = "--wave7" in args
-    wave8 = "--wave8" in args
-    wave8t = "--wave8t" in args
-    wave8s = "--wave8s" in args
-    wave9s = "--wave9s" in args
-    wave9t = "--wave9t" in args
-    wave10s = "--wave10s" in args
-    wave10t = "--wave10t" in args
-    wave11s = "--wave11s" in args
-    wave12s = "--wave12s" in args
-    wave13 = "--wave13" in args
-    wave13t = "--wave13t" in args
-    wave14s = "--wave14s" in args
-    wave14t = "--wave14t" in args
-    wave15 = "--wave15" in args
-    wave15t = "--wave15t" in args
-    scales = [
-        int(a)
-        for a in args
-        if a not in ("--wave2", "--wave3", "--wave4", "--wave5", "--wave6",
-                     "--wave7", "--wave8", "--wave8t", "--wave8s",
-                     "--wave9s", "--wave9t", "--wave10s", "--wave10t",
-                     "--wave11s", "--wave12s", "--wave13", "--wave13t",
-                     "--wave14s", "--wave14t", "--wave15", "--wave15t")
-    ] or [1, 2, 5, 10]
+    waves = [a for a in args if a in WAVES]
+    scales = [int(a) for a in args if a not in WAVES] or [1, 2, 5, 10]
+    all_names, tpch = (
+        WAVES[waves[0]] if waves else (QUERIES + list(EXTRA), False)
+    )
     from cqdg_etl_spark.queries import REGISTRY
     from cqdg_etl_spark.session import get_spark
 
-    import os
-
     spark = get_spark(app_name="scale-probe")
-    if wave15t:
-        all_names = WAVE15T
-    elif wave15:
-        all_names = WAVE15
-    elif wave14t:
-        all_names = WAVE14T
-    elif wave14s:
-        all_names = WAVE14S
-    elif wave13t:
-        all_names = WAVE13T
-    elif wave13:
-        all_names = WAVE13
-    elif wave12s:
-        all_names = WAVE12S
-    elif wave11s:
-        all_names = WAVE11S
-    elif wave10s:
-        all_names = WAVE10S
-    elif wave10t:
-        all_names = WAVE10T
-    elif wave9s:
-        all_names = WAVE9S
-    elif wave9t:
-        all_names = WAVE9T
-    elif wave8s:
-        all_names = WAVE8S
-    elif wave8t:
-        all_names = WAVE8T
-    elif wave8:
-        all_names = WAVE8
-    elif wave7:
-        all_names = WAVE7
-    elif wave6:
-        all_names = WAVE6
-    elif wave5:
-        all_names = WAVE5
-    elif wave4:
-        all_names = WAVE4
-    elif wave3:
-        all_names = WAVE3
-    elif wave2:
-        all_names = WAVE2
-    else:
-        all_names = QUERIES + list(EXTRA)
     only = os.environ.get("SCALE_PROBE_ONLY")
     if only:
         keep = {s.strip() for s in only.split(",")}
         all_names = [n for n in all_names if n in keep]
     results: dict[str, list[tuple[int, float, int]]] = {q: [] for q in all_names}
     for scale in scales:
-        sf_dir = (
-            build_tpch_scaled_dir(scale)
-            if (wave3 or wave8t or wave9t or wave10t or wave13t or wave14t
-                or wave15t)
-            else build_scaled_dir(scale)
-        )
+        sf_dir = build_tpch_scaled_dir(scale) if tpch else build_scaled_dir(scale)
         for name in all_names:
             def build():
                 if name in EXTRA:
